@@ -11,13 +11,16 @@ Layout
 ------
 - ``plans``      : driver-side logical planning (bin schemes — main.py:152-179)
 - ``operators``  : batch operators (histogram, deciles, relational, dedup,
-                   similarity, text, windows)
-- ``sources``    : catalogs, table loaders, sinks (main.py:60-79,124)
+                   similarity, text, windows, corpus pipeline)
+- ``sources``    : GeoJSON tile catalog, MJPEG frame source, table loaders
+                   and layouts, sinks (main.py:60-79,124)
 - ``functions``  : reusable Column-expression helpers (vector math, portable
                    hashing, text kernels)
 - ``streaming``  : Structured Streaming variants (windowed/sessionized
                    histograms)
-- ``multimodal`` : binary-column (image/audio) plumbing over mapInPandas
+- ``multimodal`` : GeoTIFF tile decode and the two-pass raster min/max +
+                   histogram, plus binary-column (image/audio/video)
+                   codecs, all over mapInPandas
 
 Every operator is designed for a 1000-executor / 100 TB deployment:
 aggregations rely on Spark's partial->final hash aggregation, small

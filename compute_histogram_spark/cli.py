@@ -3,9 +3,11 @@
 
 Differences from the reference, all deliberate:
 
-- SOURCE is a parquet path (or a GeoJSON tile catalog via ``--catalog``,
-  S1) instead of an S3 GeoJSON+rasters pair — the engine's data model is
-  columnar tables (SURVEY §1.4).
+- SOURCE is a parquet path (value column ``--column``) or, with
+  ``--raster``, a directory of GeoTIFF tiles, instead of an S3
+  GeoJSON+rasters pair — the engine's data model is columnar tables
+  (SURVEY §1.4). GeoJSON tile discovery lives in ``sources/catalog.py``;
+  the CLI takes the tiles directly.
 - ``--minmax_only`` actually works: the reference declares the flag but
   ignores it (main.py:27-33 vs 42-57, SURVEY §4 quirk 5). Here it stops
   after pass 1 and prints the bounds.

@@ -1,38 +1,32 @@
-"""REAL baseline JPEG codec — pure stdlib bit-twiddling + numpy.
+"""Baseline JPEG codec — pure stdlib bit-twiddling + numpy.
 
-Fourth real codec beside PNG (binary.py), GeoTIFF (geotiff.py) and
-WAV/FLAC (audio.py, flac.py), and the first LOSSY one: baseline JPEG
-(ITU-T T.81 / ISO 10918-1, sequential DCT, 8-bit, Huffman) is fully
-public spec, so "lossy image decode needs Pillow" stops being true for
-the dominant photographic format. As everywhere in ``multimodal/``, the
-decode stays a per-file kernel inside Arrow ``mapInPandas`` tasks —
-bytes never cross a shuffle (geotiff.py module docstring).
+The codec behind TIFF compression 7 (JPEG-in-TIFF, ``geotiff.py``), the
+JPEG route of ``binary.decode_image`` and the MJPEG frames of ``avi.py``:
+baseline JPEG (ITU-T T.81 / ISO 10918-1, sequential DCT, 8-bit, Huffman)
+is fully public spec, so a JPEG-compressed tile decodes without Pillow.
+As everywhere in ``multimodal/``, the decode stays a per-file kernel
+inside Arrow ``mapInPandas`` tasks — bytes never cross a shuffle
+(geotiff.py module docstring).
 
-Decoder coverage (the Huffman processes that cover real JFIF photos):
+Decoder coverage:
 - marker parse: SOI/APPn/COM/DQT/DHT/DRI/SOFn/SOS/EOI, multi-table
   DQT/DHT segments, 8-bit quant precision;
 - baseline + extended sequential (SOF0/SOF1): interleaved and
   single-component scans, arbitrary sampling factors with integer
   upsampling ratios (4:4:4, 4:2:2, 4:2:0, grayscale);
-- FULL PROGRESSIVE (SOF2): spectral selection, successive approximation
-  (DC and AC refinement passes, EOB runs), inter-scan DHT/DRI updates —
-  the process most web JPEGs actually use;
 - restart markers (DRI/RSTn) with predictor reset + byte realign;
 - abbreviated streams (tables in a separate stream, ``tables=`` — the
   TIFF compression-7 ``JPEGTables`` layout);
-- strict rejection: arithmetic coding (SOF9+) and lossless (SOF3)
-  raise, truncated segments raise, an invalid Huffman code raises, and
-  declared dimensions are validated before any allocation — against the
-  entropy byte budget for sequential, against an absolute block cap for
-  progressive (the corrupt-dimension lesson from geotiff.py — a
-  bit-flipped SOF must not buy a multi-GB ``np.zeros``).
+- strict rejection: progressive (SOF2), arithmetic coding (SOF9+) and
+  lossless (SOF3) raise ``unsupported JPEG``, truncated segments raise,
+  an invalid Huffman code raises, and declared dimensions are validated
+  against the entropy byte budget before any allocation (the
+  corrupt-dimension lesson from geotiff.py — a bit-flipped SOF must not
+  buy a multi-GB ``np.zeros``).
 
-The fixture encoders emit spec-conformant streams — baseline (Annex K
+The fixture encoder emits spec-conformant baseline streams (Annex K
 quantization + Huffman tables, IJG quality scaling, 4:4:4/4:2:2/4:2:0,
-optional restart intervals) and progressive (libjpeg-shaped scan
-script: successive-approximation DC, spectral AC bands, two AC
-refinement rounds, EOB-run accumulation, a custom non-Annex-K AC table
-carrying the EOBn symbols) — so every decoder path is round-trip-
+optional restart intervals), so every decoder path is round-trip-
 provable under a lossy tolerance bound; files produced by libjpeg
 exercise the same code paths. The 8x8 DCT pair is two orthonormal
 matrix products (``A @ f @ A.T``), vectorized over all blocks with
@@ -40,10 +34,10 @@ einsum, and verified against the textbook cosine-sum definition in
 tests.
 
 Python-speed note: Huffman entropy coding is bit-serial by construction,
-so encode/decode are O(total bits) Python — fine for feature extraction
-over fixtures and small assets; the per-file kernel slot is where a
-native decoder (Pillow/libjpeg-turbo) plugs in at production scale, with
-identical Spark-side plumbing either way.
+so encode/decode are O(total bits) Python — fine for fixtures and small
+tiles; the per-file kernel slot is where a native decoder
+(Pillow/libjpeg-turbo) plugs in at production scale, with identical
+Spark-side plumbing either way.
 """
 
 from __future__ import annotations
@@ -405,7 +399,7 @@ def _scan_stream(content: bytes, t: _Tables, expect_image: bool):
             if len(seg) < 2:
                 raise ValueError("malformed JPEG: truncated DRI")
             t.restart_interval = _u16(seg, 0)
-        elif m in (0xC0, 0xC1, 0xC2):  # baseline / ext sequential / progressive
+        elif m in (0xC0, 0xC1):  # baseline / extended sequential
             if len(seg) < 6:
                 raise ValueError("malformed JPEG: truncated SOF")
             prec, h, w, nc = seg[0], _u16(seg, 1), _u16(seg, 3), seg[5]
@@ -422,14 +416,12 @@ def _scan_stream(content: bytes, t: _Tables, expect_image: bool):
                 if not (1 <= ch <= 4 and 1 <= cv <= 4):
                     raise ValueError("malformed JPEG: bad sampling factor")
                 comps.append((cid, ch, cv, tq))
-            frame = (w, h, comps, m == 0xC2)
-        elif 0xC3 <= m <= 0xCF and m not in (DHT, 0xC8, 0xCC):
+            frame = (w, h, comps)
+        elif 0xC2 <= m <= 0xCF and m not in (DHT, 0xC8, 0xCC):
             raise ValueError(f"unsupported JPEG: SOF{m - 0xC0} process")
         elif m == SOS:
             if frame is None:
                 raise ValueError("malformed JPEG: SOS before SOF")
-            if frame[3]:
-                return _decode_progressive(content, pos, seg, frame, t)
             return _decode_scan(content, pos, seg, frame, t)
         # APPn / COM / others: skipped
 
@@ -438,7 +430,7 @@ def _decode_scan(content, pos, seg, frame, t):
     """Sequential (SOF0/SOF1) decode: the common single interleaved scan,
     or multiple successive scans over component subsets (libjpeg can emit
     a 3-component file as three single-component scans)."""
-    w, h, comps, _prog = frame
+    w, h, comps = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     grid_all: dict[int, tuple[int, int]] = {}
@@ -487,7 +479,7 @@ def _decode_scan(content, pos, seg, frame, t):
 def _sequential_scan(content, pos, seg, frame, t, grid_all, coeffs_all):
     """Decode ONE sequential scan into the shared coefficient buffers;
     returns the offset of the terminating marker."""
-    w, h, comps, _prog = frame
+    w, h, comps = frame
     if len(seg) < 1 or len(seg) < 1 + 2 * seg[0] + 3:
         raise ValueError("malformed JPEG: truncated SOS")
     ns = seg[0]
@@ -597,7 +589,7 @@ def _sequential_scan(content, pos, seg, frame, t, grid_all, coeffs_all):
 
 
 def _finish(coeffs, grid, comps, t, w, h, hmax, vmax):
-    """Shared back half: dequantize + IDCT (vectorized per component),
+    """Back half: dequantize + IDCT (vectorized per component),
     assemble block grids into planes, upsample chroma, color-convert."""
     if len(coeffs) != len(comps):
         raise ValueError(
@@ -640,248 +632,6 @@ def _finish(coeffs, grid, comps, t, w, h, hmax, vmax):
         axis=-1,
     )
     return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-# ------------------------------------------------------- progressive
-
-# coefficient-buffer cap: progressive decode keeps every DCT coefficient
-# of every component in memory until the last scan (unlike baseline's
-# streaming MCU decode), and EOB runs let a tiny corrupt file declare
-# enormous dimensions cheaply — so the guard is an absolute block cap
-# (~4M blocks = a ~90-megapixel grayscale), not an entropy-byte budget.
-_MAX_PROGRESSIVE_BLOCKS = 1 << 22
-
-
-def _decode_progressive(content, pos, seg, frame, t):
-    """Full progressive (SOF2) decode: spectral selection + successive
-    approximation (T.81 G.1/G.2), DC and AC refinement passes, EOB runs,
-    inter-scan DHT/DRI updates, restart markers."""
-    w, h, comps, _ = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mx = -(-w // (8 * hmax))
-    my = -(-h // (8 * vmax))
-    grid = {
-        i: (my * cv, mx * ch) for i, (_, ch, cv, _) in enumerate(comps)
-    }
-    if sum(gy * gx for gy, gx in grid.values()) > _MAX_PROGRESSIVE_BLOCKS:
-        raise ValueError(
-            "malformed JPEG: progressive dimensions exceed the decoder's "
-            f"block cap ({_MAX_PROGRESSIVE_BLOCKS})"
-        )
-    coeffs = {
-        i: np.zeros((gy * gx, 64), dtype=np.int32)
-        for i, (gy, gx) in grid.items()
-    }
-
-    while True:
-        pos = _progressive_scan(content, pos, seg, frame, t, grid, coeffs)
-        # between scans: DHT/DRI may redefine tables; stop at EOI
-        seg = None
-        while seg is None:
-            if pos + 2 > len(content):
-                raise ValueError("malformed JPEG: missing EOI")
-            if content[pos] != 0xFF:
-                raise ValueError("malformed JPEG: marker expected")
-            pos = _skip_fill(content, pos)
-            if pos + 2 > len(content):
-                raise ValueError("malformed JPEG: missing EOI")
-            m = content[pos + 1]
-            pos += 2
-            if m == EOI:
-                for _, tq in ((c[0], c[3]) for c in comps):
-                    if tq not in t.quant:
-                        raise ValueError("malformed JPEG: missing DQT")
-                return _finish(coeffs, grid, comps, t, w, h, hmax, vmax)
-            if _standalone(m):
-                continue
-            ln = _u16(content, pos)
-            body = content[pos + 2 : pos + ln]
-            if len(body) != ln - 2:
-                raise ValueError("malformed JPEG: truncated segment")
-            pos += ln
-            if m == DHT:
-                _parse_dht(body, t)
-            elif m == DQT:
-                _parse_dqt(body, t)
-            elif m == DRI:
-                t.restart_interval = _u16(body, 0)
-            elif m == SOS:
-                seg = body
-            elif m in (0xC0, 0xC1, 0xC2):
-                raise ValueError("malformed JPEG: second SOF")
-            # APPn/COM skipped
-
-
-def _progressive_scan(content, pos, seg, frame, t, grid, coeffs):
-    """Decode one progressive scan starting at entropy data ``pos``;
-    returns the offset of the terminating marker."""
-    w, h, comps, _ = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if len(seg) < 1 or len(seg) < 1 + 2 * seg[0] + 3:
-        raise ValueError("malformed JPEG: truncated SOS")
-    ns = seg[0]
-    ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-    ah_al = seg[3 + 2 * ns]
-    ah, al = ah_al >> 4, ah_al & 0x0F
-    if ss > 63 or se > 63 or se < ss:
-        raise ValueError("malformed JPEG: bad spectral band")
-    scan = []  # (comp_idx, dc_table or None, ac_table or None)
-    for i in range(ns):
-        cs, td_ta = seg[1 + 2 * i], seg[2 + 2 * i]
-        try:
-            ci = next(j for j, c in enumerate(comps) if c[0] == cs)
-        except StopIteration:
-            raise ValueError("malformed JPEG: SOS references unknown component")
-        td, ta = td_ta >> 4, td_ta & 0x0F
-        if ss == 0 and ah == 0 and td not in t.huff_dc:
-            raise ValueError("malformed JPEG: SOS references missing DC DHT")
-        if ss > 0 and ta not in t.huff_ac:
-            raise ValueError("malformed JPEG: SOS references missing AC DHT")
-        scan.append((ci, t.huff_dc.get(td), t.huff_ac.get(ta)))
-    if ss > 0 and ns != 1:
-        raise ValueError("malformed JPEG: interleaved AC scan")
-
-    segs, end_pos = _split_ecs(content, pos)
-    ri = t.restart_interval
-    seg_i = 0
-    rd = _EntropyReader(segs[0])
-    pred = {ci: 0 for ci, _, _ in scan}
-    eobrun = 0
-
-    def next_segment():
-        nonlocal rd, pred, eobrun, seg_i
-        seg_i += 1
-        if seg_i >= len(segs):
-            raise ValueError("malformed JPEG: missing restart segment")
-        rd = _EntropyReader(segs[seg_i])
-        pred = {ci: 0 for ci, _, _ in scan}
-        eobrun = 0
-
-    if ss == 0:
-        # DC scan: data units are MCU groups when interleaved, single
-        # ceil-grid blocks when one component
-        if ns == 1:
-            ci, dc_t, _ = scan[0]
-            _, ch, cv, _ = comps[ci]
-            bw = -(-(-(-w * ch // hmax)) // 8)
-            bt = -(-(-(-h * cv // vmax)) // 8)
-            gy, gx = grid[ci]
-            units = [
-                [(ci, r * gx + c)] for r in range(bt) for c in range(bw)
-            ]
-        else:
-            mxx = -(-w // (8 * hmax))
-            myy = -(-h // (8 * vmax))
-            units = []
-            for mcu in range(mxx * myy):
-                mr, mc = divmod(mcu, mxx)
-                group = []
-                for ci, _, _ in scan:
-                    _, ch, cv, _ = comps[ci]
-                    gy, gx = grid[ci]
-                    for byy in range(cv):
-                        for bxx in range(ch):
-                            group.append(
-                                (ci, (mr * cv + byy) * gx + (mc * ch + bxx))
-                            )
-                units.append(group)
-        table_by_comp = {ci: dc for ci, dc, _ in scan}
-        for u, group in enumerate(units):
-            if ri and u and u % ri == 0:
-                next_segment()
-            for ci, bidx in group:
-                blk = coeffs[ci][bidx]
-                if ah == 0:
-                    s = rd.decode(table_by_comp[ci])
-                    if s > 11:
-                        raise ValueError("malformed JPEG: DC category > 11")
-                    diff = _extend(rd.read_bits(s), s)
-                    pred[ci] += diff
-                    blk[0] = pred[ci] << al
-                else:
-                    if rd.read_bit():
-                        blk[0] |= 1 << al
-        return end_pos
-
-    # AC scan: single component, non-interleaved ceil-grid block order
-    ci, _, ac_t = scan[0]
-    _, ch, cv, _ = comps[ci]
-    bw = -(-(-(-w * ch // hmax)) // 8)
-    bt = -(-(-(-h * cv // vmax)) // 8)
-    gy, gx = grid[ci]
-    p1, m1 = 1 << al, -1 << al
-    n_blocks = bt * bw
-    for u in range(n_blocks):
-        if ri and u and u % ri == 0:
-            next_segment()
-        r_, c_ = divmod(u, bw)
-        blk = coeffs[ci][r_ * gx + c_]
-        if ah == 0:
-            # first pass for this band
-            if eobrun > 0:
-                eobrun -= 1
-                continue
-            k = ss
-            while k <= se:
-                rs = rd.decode(ac_t)
-                r, s = rs >> 4, rs & 0x0F
-                if s == 0:
-                    if r < 15:
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += rd.read_bits(r)
-                        break
-                    k += 16  # ZRL
-                    continue
-                k += r
-                if k > se:
-                    raise ValueError("malformed JPEG: AC index beyond band")
-                blk[ZIGZAG[k]] = _extend(rd.read_bits(s), s) << al
-                k += 1
-        else:
-            # refinement pass (T.81 G.1.2.3)
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = rd.decode(ac_t)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r < 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += rd.read_bits(r)
-                            break
-                        val = 0  # ZRL: skip 16 zero-history positions
-                    else:
-                        if s != 1:
-                            raise ValueError(
-                                "malformed JPEG: refinement size != 1"
-                            )
-                        val = p1 if rd.read_bit() else m1
-                    while k <= se:
-                        zz = ZIGZAG[k]
-                        if blk[zz] != 0:
-                            if rd.read_bit() and (blk[zz] & p1) == 0:
-                                blk[zz] += p1 if blk[zz] >= 0 else m1
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val and k <= se:
-                        blk[ZIGZAG[k]] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    zz = ZIGZAG[k]
-                    if blk[zz] != 0:
-                        if rd.read_bit() and (blk[zz] & p1) == 0:
-                            blk[zz] += p1 if blk[zz] >= 0 else m1
-                    k += 1
-                eobrun -= 1
-    return end_pos
 
 
 def split_jpeg_tables(blob: bytes) -> tuple[bytes, bytes]:
@@ -1145,290 +895,4 @@ def encode_jpeg_baseline(
     out += seg(SOS, bytes(sos))
     out += wtr.out
     out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# ------------------------------------------ progressive fixture encoder
-
-# The Annex K AC tables carry no EOBn symbols (baseline never emits
-# them), so the progressive fixture encoder ships its own AC table: all
-# 176 (run, size) symbols for run 0-15 x size 0-10 — EOBn (size 0,
-# run 0-14), ZRL (0xF0) and every coefficient code — at a flat 8 bits.
-# 176 < 255 leaves the all-ones code unused as T.81 requires; flat codes
-# cost compression but prove the decoder against a NON-Annex-K DHT.
-PROG_AC_VALS = [(r << 4) | s for r in range(16) for s in range(11)]
-PROG_AC_BITS = [0, 0, 0, 0, 0, 0, 0, len(PROG_AC_VALS), 0, 0, 0, 0, 0, 0, 0, 0]
-
-
-def _emit_eobrun(wtr, ac_tab, state):
-    """Flush a pending EOB run + its buffered correction bits."""
-    if state["eobrun"] > 0:
-        nbits = state["eobrun"].bit_length() - 1
-        code, ln = ac_tab[nbits << 4]
-        wtr.write(code, ln)
-        if nbits:
-            wtr.write(state["eobrun"] - (1 << nbits), nbits)
-        state["eobrun"] = 0
-    for b in state["br"]:
-        wtr.write(b, 1)
-    state["br"] = []
-
-
-def _encode_ac_first(wtr, blk_zz, ss, se, al, ac_tab, state):
-    """AC first pass for one block (T.81 G.1.2.2): point transform
-    |v| >> al with sign, run lengths, shared EOB-run accumulation."""
-    vals = []
-    for k in range(ss, se + 1):
-        v = int(blk_zz[k])
-        mag = (v if v >= 0 else -v) >> al
-        vals.append(mag if v >= 0 else -mag)
-    last = 0
-    for i, v in enumerate(vals):
-        if v:
-            last = i + 1
-    if last == 0:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(wtr, ac_tab, state)
-        return
-    _emit_eobrun(wtr, ac_tab, state)
-    r = 0
-    for v in vals[:last]:
-        if v == 0:
-            r += 1
-            continue
-        while r > 15:
-            code, ln = ac_tab[0xF0]
-            wtr.write(code, ln)
-            r -= 16
-        s = _magnitude(v)
-        code, ln = ac_tab[(r << 4) | s]
-        wtr.write(code, ln)
-        wtr.write(v if v >= 0 else v + (1 << s) - 1, s)
-        r = 0
-    if last <= se - ss:
-        state["eobrun"] += 1
-        if state["eobrun"] == 0x7FFF:
-            _emit_eobrun(wtr, ac_tab, state)
-
-
-def _encode_ac_refine(wtr, blk_zz, ss, se, al, ac_tab, state):
-    """AC refinement for one block (T.81 G.1.2.3): newly-significant
-    coefficients as (run, 1) + sign, correction bits for history-nonzero
-    positions buffered behind the next emitted symbol."""
-    absv = []
-    eob = 0
-    for i, k in enumerate(range(ss, se + 1)):
-        v = int(blk_zz[k])
-        mag = (v if v >= 0 else -v) >> al
-        absv.append(mag)
-        if mag == 1:
-            eob = i + 1
-    r = 0
-    br: list[int] = []
-    for i, k in enumerate(range(ss, se + 1)):
-        mag = absv[i]
-        if mag == 0:
-            r += 1
-            continue
-        while r > 15 and i < eob:
-            _emit_eobrun(wtr, ac_tab, state)
-            code, ln = ac_tab[0xF0]
-            wtr.write(code, ln)
-            r -= 16
-            for b in br:
-                wtr.write(b, 1)
-            br = []
-        if mag > 1:
-            br.append(mag & 1)
-            continue
-        _emit_eobrun(wtr, ac_tab, state)
-        code, ln = ac_tab[(r << 4) | 1]
-        wtr.write(code, ln)
-        wtr.write(0 if int(blk_zz[k]) < 0 else 1, 1)
-        for b in br:
-            wtr.write(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        state["eobrun"] += 1
-        state["br"].extend(br)
-        if state["eobrun"] == 0x7FFF or len(state["br"]) > 900:
-            _emit_eobrun(wtr, ac_tab, state)
-
-
-def encode_jpeg_progressive(
-    arr: np.ndarray,
-    quality: int = 85,
-    subsampling: str = "4:4:4",
-) -> bytes:
-    """Spec-conformant PROGRESSIVE (SOF2) encoder — the fixture side
-    proving :func:`_decode_progressive`. Scan script exercises every
-    decoder path: successive-approximation DC (first pass Al=1, one
-    refinement), per-component AC spectral bands (1-5, 6-63) at Al=2,
-    then two AC refinement rounds (Al 2->1, 1->0) — the same shape
-    libjpeg's default progressive script uses."""
-    a = np.asarray(arr)
-    if a.dtype != np.uint8 or a.ndim not in (2, 3):
-        raise ValueError("need uint8 (h, w) or (h, w, 3)")
-    gray = a.ndim == 2
-    h, w = a.shape[:2]
-    if h == 0 or w == 0 or h > 65535 or w > 65535:
-        raise ValueError("bad dimensions")
-    ql, qc = _quality_tables(quality)
-
-    if gray:
-        planes = [a]
-        samp = [(1, 1)]
-        qids = [0]
-    else:
-        rf = a.astype(np.float64)
-        y = 0.299 * rf[..., 0] + 0.587 * rf[..., 1] + 0.114 * rf[..., 2]
-        cb = 128.0 - 0.168736 * rf[..., 0] - 0.331264 * rf[..., 1] + 0.5 * rf[..., 2]
-        cr = 128.0 + 0.5 * rf[..., 0] - 0.418688 * rf[..., 1] - 0.081312 * rf[..., 2]
-        y, cb, cr = (np.clip(np.round(p), 0, 255) for p in (y, cb, cr))
-        if subsampling == "4:2:0":
-            eh, ew = -(-h // 2) * 2, -(-w // 2) * 2
-
-            def down(p):
-                pp = np.pad(p, ((0, eh - h), (0, ew - w)), mode="edge")
-                return pp.reshape(eh // 2, 2, ew // 2, 2).mean((1, 3))
-
-            planes = [y, down(cb), down(cr)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        elif subsampling == "4:4:4":
-            planes = [y, cb, cr]
-            samp = [(1, 1)] * 3
-        else:
-            raise ValueError("subsampling must be 4:4:4 or 4:2:0")
-        qids = [0, 1, 1]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mx, my = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    qtabs = [ql, qc]
-    comp_blocks = []
-    ceil_grids = []
-    for p, (sh, sv), qi in zip(planes, samp, qids):
-        b = _plane_blocks(p, qtabs[qi])
-        need_r, need_c = my * sv, mx * sh
-        gr, gc = b.shape[:2]
-        if gr < need_r or gc < need_c:
-            b = np.pad(b, ((0, need_r - gr), (0, need_c - gc), (0, 0)),
-                       mode="edge")
-        comp_blocks.append(b)
-        cw = -(-w * sh // hmax)
-        chh = -(-h * sv // vmax)
-        ceil_grids.append((-(-chh // 8), -(-cw // 8)))
-
-    dc_l = _build_encode_table(DC_LUMA_BITS, DC_LUMA_VALS)
-    dc_c = _build_encode_table(DC_CHROMA_BITS, DC_CHROMA_VALS)
-    prog_ac = _build_encode_table(PROG_AC_BITS, PROG_AC_VALS)
-    n = len(planes)
-    dc_tabs = [dc_l] + [dc_c] * (n - 1)
-    ac_tabs = [prog_ac] * n
-
-    def sos_header(comp_ids, tds_tas, ss, se, ah, al):
-        body = bytearray([len(comp_ids)])
-        for cid, (td, ta) in zip(comp_ids, tds_tas):
-            body += bytes([cid, (td << 4) | ta])
-        body += bytes([ss, se, (ah << 4) | al])
-        return bytes([0xFF, SOS]) + struct.pack(">H", len(body) + 2) + bytes(body)
-
-    scans = []  # (header bytes, entropy bytes)
-
-    # --- DC first pass (interleaved, Al=1) + one refinement (Al=0)
-    for ah, al in ((0, 1), (1, 0)):
-        wtr = _EntropyWriter()
-        pred = [0] * n
-        for mcu in range(mx * my):
-            mr, mc = divmod(mcu, mx)
-            for ci, (sh, sv) in enumerate(samp):
-                for byy in range(sv):
-                    for bxx in range(sh):
-                        dc = int(comp_blocks[ci][mr * sv + byy, mc * sh + bxx][0])
-                        if ah == 0:
-                            v = dc >> al  # arithmetic shift (floor)
-                            diff = v - pred[ci]
-                            pred[ci] = v
-                            s = _magnitude(diff)
-                            code, ln = dc_tabs[ci][s]
-                            wtr.write(code, ln)
-                            if s:
-                                wtr.write(
-                                    diff if diff >= 0 else diff + (1 << s) - 1,
-                                    s,
-                                )
-                        else:
-                            wtr.write((dc >> al) & 1, 1)
-        wtr.align()
-        scans.append((
-            sos_header(list(range(1, n + 1)),
-                       [(0 if i == 0 else 1, 0) for i in range(n)],
-                       0, 0, ah, al),
-            bytes(wtr.out),
-        ))
-
-    # --- AC: spectral bands at Al=2, then refinements 2->1, 1->0
-    for ci in range(n):
-        bt, bw = ceil_grids[ci]
-        blocks = [comp_blocks[ci][r, c] for r in range(bt) for c in range(bw)]
-        ta = 0  # all AC scans share the flat progressive table
-        for ss_, se_, ah, al in ((1, 5, 0, 2), (6, 63, 0, 2)):
-            wtr = _EntropyWriter()
-            state = {"eobrun": 0, "br": []}
-            for blk in blocks:
-                _encode_ac_first(wtr, blk, ss_, se_, al, ac_tabs[ci], state)
-            _emit_eobrun(wtr, ac_tabs[ci], state)
-            wtr.align()
-            scans.append((
-                sos_header([ci + 1], [(0, ta)], ss_, se_, ah, al),
-                bytes(wtr.out),
-            ))
-        for ah, al in ((2, 1), (1, 0)):
-            wtr = _EntropyWriter()
-            state = {"eobrun": 0, "br": []}
-            for blk in blocks:
-                _encode_ac_refine(wtr, blk, 1, 63, al, ac_tabs[ci], state)
-            _emit_eobrun(wtr, ac_tabs[ci], state)
-            wtr.align()
-            scans.append((
-                sos_header([ci + 1], [(0, ta)], 1, 63, ah, al),
-                bytes(wtr.out),
-            ))
-
-    out = bytearray(b"\xff\xd8")
-    out += (
-        b"\xff\xe0" + struct.pack(">H", 16)
-        + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    zz_l = np.zeros(64, np.uint8)
-    zz_l[:] = ql[ZIGZAG]
-    out += seg(DQT, b"\x00" + zz_l.tobytes())
-    if not gray:
-        zz_c = np.zeros(64, np.uint8)
-        zz_c[:] = qc[ZIGZAG]
-        out += seg(DQT, b"\x01" + zz_c.tobytes())
-
-    sof = bytearray(struct.pack(">BHHB", 8, h, w, n))
-    for i, (sh, sv) in enumerate(samp):
-        sof += bytes([i + 1, (sh << 4) | sv, qids[i]])
-    out += seg(0xC2, bytes(sof))  # SOF2: progressive
-
-    def dht(tc, th, bits, vals):
-        return seg(DHT, bytes([(tc << 4) | th] + bits + vals))
-
-    out += dht(0, 0, DC_LUMA_BITS, DC_LUMA_VALS)
-    out += dht(1, 0, PROG_AC_BITS, PROG_AC_VALS)
-    if not gray:
-        out += dht(0, 1, DC_CHROMA_BITS, DC_CHROMA_VALS)
-
-    for header, entropy in scans:
-        out += header
-        out += entropy
-    out += b"\xff\xd9"
     return bytes(out)

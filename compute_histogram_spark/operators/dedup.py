@@ -220,43 +220,6 @@ def append_minhash_index(
     sig.write.mode("append").parquet(path)
 
 
-def delta_candidates(
-    index_sigs: DataFrame,
-    new_doc_ids: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    rows_per_band: int = DEFAULT_ROWS_PER_BAND,
-) -> DataFrame:
-    """LSH candidate pairs that involve at least one NEW document.
-
-    The incremental-dedup join: new-batch band rows (small side, broadcast
-    when it fits) against the full index's band rows — an equi-join on
-    (band_id, band_hash), so only same-bucket docs meet, and old x old
-    pairs (already known from prior rounds) are never re-derived. Emitted
-    pairs are ordered doc_id_1 < doc_id_2; union with previously stored
-    pairs reconstructs exactly the full-recompute pair set (pinned in
-    tests/test_dedup.py).
-    """
-    all_bands = _band_long(index_sigs, num_hashes, rows_per_band)
-    new_bands = all_bands.join(
-        F.broadcast(new_doc_ids.select("doc_id")), "doc_id", "left_semi"
-    )
-    a, b = new_bands.alias("a"), all_bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_id_1"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_id_2"),
-        )
-        .distinct()
-        .orderBy("doc_id_1", "doc_id_2")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,

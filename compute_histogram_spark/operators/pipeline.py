@@ -587,149 +587,6 @@ def weighted_sample(
     )
 
 
-def crawl_corpus(
-    spark,
-    warc_path: str,
-    out_path: str | None = None,
-    min_chars: int = 50,
-    n_shards: int = 16,
-    extractor: str = "parser",
-    url_dedup_first: bool = False,
-) -> DataFrame:
-    """Crawl archives -> deduplicated training corpus, end to end.
-
-    The one-call composition of the ingestion chain every web-corpus
-    build runs (the C4/FineWeb skeleton): read ``warc_path`` through the
-    ``warcdocs`` source (HTTP 200 text records, HTML already extracted),
-    drop short documents, EXACT-dedup by content (first occurrence by
-    (path, offset) wins — crawl order, so re-crawled duplicates keep
-    their earliest capture), and optionally export WET shards to
-    ``out_path``. Returns the corpus DataFrame
-    ``(doc_id, uri, text, n_chars)`` either way.
-
-    Scale shape: every stage is a registered source scan, a map, or one
-    hash shuffle (the dedup groupBy); nothing touches the driver. The
-    heavy lifting lives in the composed parts — this function adds no
-    machinery of its own, which is the point: the pipeline suite
-    composes.
-    """
-    from compute_histogram_spark.sources.warc import WarcDocsDataSource
-
-    spark.dataSource.register(WarcDocsDataSource)
-    docs = (
-        spark.read.format("warcdocs").option("path", warc_path)
-        .option("extractor", extractor)  # 'fast' = the opt-in regex path
-        .load()
-        .where(F.col("parsed") & (F.col("http_status") == 200))
-        .where(F.col("text").isNotNull() & (F.length("text") >= min_chars))
-        .select(
-            "target_uri", "record_offset", F.col("path").alias("_seg"),
-            "text",
-        )
-    )
-    if url_dedup_first:
-        # the C4/FineWeb pre-stage: collapse re-crawl URL variants
-        # (tracking params, case, fragments) to the earliest capture
-        # BEFORE content hashing — one shuffle on the canonical string,
-        # and the (usually much larger) duplicate payloads never reach
-        # the sha2 stage. Records with NO WARC-Target-URI (the source
-        # emits NULL) get a per-row unique (_seg, offset) fallback key so
-        # they pass through to content dedup instead of collapsing into
-        # one NULL group (r10 advice — that silently dropped distinct
-        # null-URI documents).
-        _key = F.coalesce(
-            F.nullif(canonical_url(F.col("target_uri")), F.lit("")),
-            F.concat_ws(":", F.lit("\x00nouri"), "_seg",
-                        F.col("record_offset").cast("string")),
-        )
-        docs = (
-            docs.groupBy(_key.alias("_cu"))
-            .agg(
-                F.min(
-                    F.struct("_seg", "record_offset", "target_uri", "text")
-                ).alias("first")
-            )
-            .select(
-                F.col("first.target_uri").alias("target_uri"),
-                F.col("first.record_offset").alias("record_offset"),
-                F.col("first._seg").alias("_seg"),
-                F.col("first.text").alias("text"),
-            )
-        )
-    kept = (
-        docs.groupBy(F.sha2("text", 256).alias("_ch"))
-        .agg(
-            F.min(F.struct("_seg", "record_offset", "target_uri", "text")).alias("first")
-        )
-        .select(
-            F.abs(F.xxhash64("_ch")).alias("doc_id"),
-            F.col("first.target_uri").alias("uri"),
-            F.col("first.text").alias("text"),
-        )
-        .withColumn("n_chars", F.length("text"))
-    )
-    if out_path is not None:
-        from compute_histogram_spark.sources.sinks import write_wet_shards
-
-        write_wet_shards(kept, out_path, n_shards=n_shards)
-    return kept
-
-
-def crawl_corpus_stream(
-    spark,
-    warc_path: str,
-    out_path: str,
-    checkpoint: str,
-    min_chars: int = 50,
-    n_shards: int = 4,
-):
-    """Streaming :func:`crawl_corpus`: incremental corpus building.
-
-    Tails ``warc_path`` through the streaming ``warcdocs`` reader, keeps
-    the same HTTP-200/min-length slice, dedups by content hash ACROSS
-    batches (streaming ``dropDuplicates`` state — unbounded by design:
-    corpus dedup has no time horizon; the state row is a 32-byte digest,
-    so even 10^10 documents is ~320 GB of state across a cluster, and
-    the batch pipeline remains the right tool for a full rebuild), and
-    appends each micro-batch as WET shards named
-    ``batch-<epoch>-<shard>`` — monotonic, so the OUTPUT directory is
-    itself tailable by the streaming reader (pipelines chain).
-
-    Exactly-once to the filesystem: a replayed epoch rewrites the same
-    deterministic file names with identical bytes (digest-derived
-    content, atomic rename), so retries are idempotent rather than
-    duplicating. Returns the StreamingQuery; callers own its lifecycle.
-    """
-    from compute_histogram_spark.sources.sinks import write_wet_shards
-    from compute_histogram_spark.sources.warc import WarcDocsDataSource
-
-    spark.dataSource.register(WarcDocsDataSource)
-    docs = (
-        spark.readStream.format("warcdocs").option("path", warc_path).load()
-        .where(F.col("parsed") & (F.col("http_status") == 200))
-        .where(F.col("text").isNotNull() & (F.length("text") >= min_chars))
-        .select(
-            F.col("target_uri").alias("uri"),
-            "text",
-            F.sha2("text", 256).alias("content_hash"),
-        )
-        .dropDuplicates(["content_hash"])
-    )
-
-    def _sink(batch_df, epoch_id):
-        write_wet_shards(
-            batch_df, out_path, n_shards=n_shards,
-            prefix=f"batch-{epoch_id:09d}-",
-        )
-
-    return (
-        docs.writeStream.foreachBatch(_sink)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
 # ---------------------------------------------------------------------------
 # URL canonicalization + URL-level dedup (the C4/FineWeb crawl-dedup
 # stage that runs BEFORE content dedup: re-crawled pages differ only in
@@ -861,9 +718,9 @@ def end_to_end_corpus(
     min_span: int = 16,
     with_metrics: bool = False,
 ):
-    """The full corpus-refinement chain as ONE lazy plan (VERDICT r12
-    #6) — the C4/FineWeb skeleton every web-scale training-data build
-    runs, composed from the already-pinned stages:
+    """The full corpus-refinement chain — the C4/FineWeb skeleton every
+    web-scale training-data build runs, composed from the already-pinned
+    stages:
 
         url_dedup -> exact dedup -> MinHash near-dup removal ->
         ExactSubstr duplicate-span removal -> quality gate
@@ -871,9 +728,17 @@ def end_to_end_corpus(
     ``docs`` carries (doc_id, text, ``url_col``); ``weights`` is the
     (bucket, w_milli) scorer table. Returns the surviving corpus as
     ``(doc_id, text, n_tokens, n_removed)`` with span-scrubbed text.
-    Nothing materializes between stages: Spark sees one DAG, so column
-    pruning and stage pipelining cross the stage boundaries (e.g. the
-    url stage's shuffle carries only (canonical, id)).
+
+    Eager stage loop: the url, exact and near-dup stages each persist
+    their surviving corpus, pruned to (doc_id, text). This call runs
+    two Spark jobs before it returns: one ``count()`` materializes the
+    exact-dedup boundary (and the url boundary en route), one the
+    near-dup boundary, and each predecessor is unpersisted once its
+    successor is cached. Only the span scrub and the quality gate stay
+    lazy in the returned frame, which reads the near-dup boundary;
+    that cache is tagged via ``defer_release`` for the caller to free
+    after its action. Column pruning still reaches the scan (the url
+    stage's shuffle carries only (canonical, id)).
 
     Scale shape per stage (each independently plan-audited where it was
     pinned): one canonical-string shuffle; one digest shuffle; banded
@@ -886,14 +751,14 @@ def end_to_end_corpus(
     :func:`observe_stage`, readable after one action on the result.
     NOTE: an Observation counts rows per PLAN PASS; a stage whose output
     feeds two consumers in the same job (e.g. the dedup pattern
-    "aggregate keys, then semi-join the keys back") counts each pass,
-    so its n_rows is a multiple of the stage's true cardinality. Since
-    the r16 stage-boundary persists, the url/exact/near taps sit on
-    cached frames that materialize once, so those counts land at (or
-    much nearer) the true cardinality; the caveat still applies to any
-    un-persisted tap. Exact survivor counts need a per-stage action;
-    the single-pass numbers are for relative flow/ratio dashboards,
-    which is what a 100 TB run can afford.
+    "aggregate keys, then semi-join the keys back") counts each pass, so
+    its n_rows is a multiple of the stage's true cardinality. The
+    url/exact/near taps sit on the persisted boundaries, which the
+    build-time count jobs materialize once, so those counts land at (or
+    much nearer) the true cardinality; the caveat still applies to the
+    un-persisted span and gate taps. Exact survivor counts need a
+    per-stage action; the single-pass numbers are for relative
+    flow/ratio dashboards, which is what a 100 TB run can afford.
     """
     from compute_histogram_spark.operators.classify import score_filter
     from compute_histogram_spark.operators.dedup import (
@@ -982,608 +847,6 @@ def end_to_end_corpus(
     out = _tap(score_filter(d4, weights, threshold=threshold), "gate")
     defer_release(out, d3)  # caller frees d3 after its action
     return (out, obs) if with_metrics else out
-
-
-def _ingest_batch_tag(new_docs: DataFrame, url_col: str) -> str:
-    """Deterministic content-derived batch tag: a retry of the same
-    batch resumes the same staged commit instead of appending twice.
-    One column-pruned aggregation over the delta (count + id range +
-    order-independent crc sums of uri and text)."""
-    import hashlib
-
-    r = new_docs.agg(
-        F.count("*").alias("c"),
-        F.min("doc_id").alias("mn"),
-        F.max("doc_id").alias("mx"),
-        F.sum(F.crc32(F.col(url_col).cast("binary"))).alias("su"),
-        F.sum(F.crc32(F.col("text").cast("binary"))).alias("st"),
-    ).first()
-    key = f"{r['c']}:{r['mn']}:{r['mx']}:{r['su']}:{r['st']}"
-    return hashlib.sha256(key.encode()).hexdigest()[:16]
-
-
-def _publish_staged(state_dir: str, tag: str) -> None:
-    """Resume-safe publish of a COMMITTED staged batch: rename each
-    staged part-file into the flat state table under a tag-prefixed
-    (collision-free, idempotent) name, then drop the staging dir.
-    Renames are atomic per file; a crash mid-publish leaves the
-    remaining files in staging for the next entry's recovery scan
-    (already-moved files are gone from staging and skipped)."""
-    import glob
-    import os
-    import shutil
-
-    stage = os.path.join(state_dir, "staging", tag)
-    for sub in ("corpus", "sigs", "keys"):
-        src_dir = os.path.join(stage, sub)
-        if not os.path.isdir(src_dir):
-            continue
-        dst_dir = os.path.join(state_dir, sub)
-        os.makedirs(dst_dir, exist_ok=True)
-        for f in sorted(glob.glob(os.path.join(src_dir, "part-*"))):
-            os.rename(
-                f, os.path.join(dst_dir, f"{tag}-{os.path.basename(f)}")
-            )
-        # the readers' existence probe (matches what a Spark append
-        # would have left behind)
-        open(os.path.join(dst_dir, "_SUCCESS"), "w").close()
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def _commit_log(state_dir: str) -> list:
-    """Ordered commit log [(seq, tag), ...] reconstructed from the
-    marker files. Markers written since r16 carry ``"<seq>\\n<tag>"``
-    with an ABSOLUTE sequence (the writer computes next = 1 + max over
-    this log, so explicit seqs already sit above any legacy ones);
-    legacy tag-only markers (r15) are assigned implicit seqs by mtime
-    rank. O(batches) tiny files — the same scale class as the markers
-    themselves."""
-    import os
-
-    commits = os.path.join(state_dir, "_commits")
-    if not os.path.isdir(commits):
-        return []
-    explicit, legacy = [], []
-    for tag in os.listdir(commits):
-        if tag.endswith(".tmp"):  # torn marker write: never committed
-            continue
-        p = os.path.join(commits, tag)
-        try:
-            body = open(p).read()
-        except OSError:
-            continue
-        first = body.split("\n", 1)[0].strip()
-        # a legacy (r15) marker's body IS its own tag — that test, not
-        # isdigit(), disambiguates: a 16-hex tag can be all digits
-        if first != tag and first.isdigit():
-            explicit.append((int(first), tag))
-        else:
-            legacy.append((os.path.getmtime(p), tag))
-    legacy.sort()
-    out = [(i + 1, tag) for i, (_m, tag) in enumerate(legacy)]
-    out.extend(explicit)
-    out.sort()
-    return out
-
-
-def corpus_snapshots(state_dir: str) -> list:
-    """The ingest's commit history as [{"seq": n, "tag": t}, ...] in
-    commit order — the discovery call before :func:`read_corpus_as_of`."""
-    return [{"seq": s, "tag": t} for s, t in _commit_log(state_dir)]
-
-
-def read_corpus_as_of(spark, state_dir: str, seq: int | None = None):
-    """SNAPSHOT read of the ingested corpus as of commit ``seq`` (None =
-    latest) — time travel over the append-only state (r16).
-
-    Because every published part-file is tag-prefixed and every commit
-    is marker-logged, any historical snapshot is reconstructible by
-    FILE-LIST PRUNING alone: select the part-files whose tag committed
-    at or before ``seq`` and hand Spark that explicit list. No data is
-    copied, no tombstones consulted — the corpus is append-only by
-    construction (removals happen before publication, never after), so
-    a snapshot is exactly a prefix of the commit log. Cost is
-    O(committed files) driver-side listing; the read itself plans like
-    any parquet scan (pruning/pushdown intact).
-
-    Runs the entry-time recovery scan first (the ingest's own
-    protocol): a committed-but-half-published batch OR compaction is
-    finish-published before listing, so a snapshot can never observe a
-    torn commit. After :func:`compact_corpus_state`, snapshots below
-    the compaction horizon raise (their granularity was vacuumed);
-    snapshots at/above it read the compact set plus later tags and stay
-    exact. The single-writer / rename-atomicity caveats of the ingest
-    apply unchanged (object stores should gate reads on the marker)."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as _F  # noqa: F401
-
-    _recover_ingest_state(state_dir)
-    log = _commit_log(state_dir)
-    if not log:
-        raise ValueError(f"no committed ingest batches under {state_dir}")
-    manifest = _compaction_manifest(state_dir)
-    if manifest is not None:
-        horizon = manifest["horizon"]
-        if seq is not None and seq < horizon:
-            raise ValueError(
-                f"snapshot {seq} predates the compaction horizon "
-                f"{horizon}: that granularity was vacuumed "
-                "(compact_corpus_state truncates history below its "
-                "horizon — the Delta/Iceberg vacuum trade)"
-            )
-        keep = {tag for s, tag in log
-                if s > horizon and (seq is None or s <= seq)}
-        keep.add(manifest["prefix"])
-    else:
-        keep = {tag for s, tag in log if seq is None or s <= seq}
-    corpus_dir = os.path.join(state_dir, "corpus")
-    files = [
-        f for f in sorted(glob.glob(os.path.join(corpus_dir, "*-part-*")))
-        if os.path.basename(f).split("-", 1)[0] in keep
-    ]
-    if not files:
-        # valid snapshot before any kept rows landed: empty frame with
-        # the table's schema (the full table must exist to know it)
-        return spark.createDataFrame(
-            [], spark.read.parquet(corpus_dir).schema
-        )
-    return spark.read.parquet(*files)
-
-
-def corpus_snapshot_diff(
-    spark, state_dir: str, from_seq: int, to_seq: int | None = None
-):
-    """Rows ADDED to the ingested corpus between commits ``from_seq``
-    (exclusive) and ``to_seq`` (inclusive; None = latest) — the
-    incremental-consumer API over the snapshot store (r16).
-
-    The corpus state is append-only by construction (dedup removals
-    happen before publication, never after), so the diff between two
-    snapshots is EXACTLY the rows of the commits in between: no
-    anti-join, no checksum comparison — file-list pruning selects the
-    part-files whose tag committed in ``(from_seq, to_seq]`` and the
-    read is O(delta) like the ingest itself. This is what a downstream
-    consumer (index builder, trainer shard packer) polls instead of
-    re-reading the corpus: ``diff(last_seen, None)`` is its catch-up
-    batch. Identity: rows(as_of(b)) == rows(as_of(a)) + diff(a, b) —
-    pinned in tests.
-
-    ``from_seq`` must be a valid snapshot boundary: at/above the
-    compaction horizon (below it, per-commit granularity was vacuumed
-    and the prefix can no longer be split) and not beyond the latest
-    commit. ``from_seq == 0`` (diff from genesis, horizon permitting)
-    returns the whole corpus as of ``to_seq``."""
-    import glob
-    import os
-
-    _recover_ingest_state(state_dir)
-    log = _commit_log(state_dir)
-    if not log:
-        raise ValueError(f"no committed ingest batches under {state_dir}")
-    latest = max(s for s, _t in log)
-    if to_seq is None:
-        to_seq = latest
-    manifest = _compaction_manifest(state_dir)
-    horizon = manifest["horizon"] if manifest is not None else 0
-    if from_seq < horizon:
-        raise ValueError(
-            f"diff base {from_seq} predates the compaction horizon "
-            f"{horizon}: that granularity was vacuumed"
-        )
-    if not 0 <= from_seq <= to_seq <= latest:
-        raise ValueError(
-            f"invalid diff range ({from_seq}, {to_seq}]: latest commit "
-            f"is {latest}"
-        )
-    keep = {tag for s, tag in log if from_seq < s <= to_seq}
-    corpus_dir = os.path.join(state_dir, "corpus")
-    files = [
-        f for f in sorted(glob.glob(os.path.join(corpus_dir, "*-part-*")))
-        if os.path.basename(f).split("-", 1)[0] in keep
-    ]
-    if not files:
-        return spark.createDataFrame(
-            [], spark.read.parquet(corpus_dir).schema
-        )
-    return spark.read.parquet(*files)
-
-
-def _recover_ingest_state(state_dir: str) -> None:
-    """Crash recovery for the staged-commit protocol: a batch under
-    staging/ WITH a commit marker was fully staged — finish its
-    publish; one WITHOUT never committed — discard it (the retry
-    re-stages deterministically under the same content-derived tag).
-    Also finishes a committed-but-half-published COMPACTION (r16): the
-    manifest is the compaction's commit marker — with it present, any
-    staged compact parts publish and every replaced-prefix straggler is
-    deleted; a staged compact set WITHOUT a matching manifest never
-    committed and is discarded."""
-    import os
-    import shutil
-
-    staging = os.path.join(state_dir, "staging")
-    manifest = _compaction_manifest(state_dir)
-    if os.path.isdir(staging):
-        for tag in os.listdir(staging):
-            if tag.startswith("compact-"):
-                prefix = tag[len("compact-"):]
-                if manifest and manifest["prefix"] == prefix:
-                    _publish_compaction(state_dir, prefix)
-                else:
-                    shutil.rmtree(
-                        os.path.join(staging, tag), ignore_errors=True
-                    )
-            elif os.path.exists(os.path.join(state_dir, "_commits", tag)):
-                _publish_staged(state_dir, tag)
-            else:
-                shutil.rmtree(os.path.join(staging, tag), ignore_errors=True)
-    if manifest:
-        _delete_replaced_parts(state_dir, manifest["replaced"])
-
-
-def _compaction_manifest(state_dir: str):
-    """The committed compaction, or None. One JSON file written via
-    temp+rename — its existence IS the compaction's commit point."""
-    import json
-    import os
-
-    p = os.path.join(state_dir, "_compaction")
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
-_COMPACTED_TABLES = ("corpus", "keys", "sigs")
-
-
-def _publish_compaction(state_dir: str, prefix: str) -> None:
-    """Rename staged compact part-files into each state table under the
-    manifest prefix — same idempotent per-file rename as
-    :func:`_publish_staged`. Staged layout is either per-table
-    subdirectories (``compact-<prefix>/<table>/part-*``) or the r16
-    corpus-only flat layout (``compact-<prefix>/part-*``)."""
-    import glob
-    import os
-    import shutil
-
-    stage = os.path.join(state_dir, "staging", f"compact-{prefix}")
-    if not os.path.isdir(stage):
-        return
-    flat = sorted(glob.glob(os.path.join(stage, "part-*")))
-    per_table = [("corpus", f) for f in flat]
-    for table in _COMPACTED_TABLES:
-        per_table.extend(
-            (table, f)
-            for f in sorted(glob.glob(os.path.join(stage, table, "part-*")))
-        )
-    for table, f in per_table:
-        dst = os.path.join(state_dir, table)
-        os.makedirs(dst, exist_ok=True)
-        os.rename(f, os.path.join(dst, f"{prefix}-{os.path.basename(f)}"))
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-def _delete_replaced_parts(state_dir: str, replaced) -> None:
-    """Vacuum the data files a committed compaction superseded —
-    idempotent, re-run at every entry until clean."""
-    import glob
-    import os
-
-    gone = set(replaced)
-    for table in _COMPACTED_TABLES:
-        for f in glob.glob(os.path.join(state_dir, table, "*-part-*")):
-            if os.path.basename(f).split("-", 1)[0] in gone:
-                os.remove(f)
-
-
-def compact_corpus_state(
-    spark, state_dir: str, up_to_seq: int | None = None
-) -> dict:
-    """Compact ALL THREE state tables (corpus, keys, sigs) for every
-    commit <= ``up_to_seq`` (default: latest) into one coalesced file
-    set each — the table maintenance the per-commit publish makes
-    necessary (r16): each commit leaves its own tag-prefixed parts, so
-    a long-lived state accumulates O(batches) small files and scan
-    cost starts scaling with FILE COUNT, not bytes (the
-    sources/compaction.py story applied to the ingest state). keys/
-    and sigs/ matter MORE than corpus/ here: every future ingest batch
-    reads both indexes, so their file count taxes every O(delta) job,
-    not just snapshot reads.
-
-    Semantics — the Delta/Iceberg vacuum trade, stated explicitly:
-    snapshot granularity BELOW the horizon is truncated
-    (``read_corpus_as_of(seq < horizon)`` raises); reads at or above
-    the horizon stay EXACT (compact parts cover exactly the commits
-    <= horizon; later tags layer on top). The commit LOG itself is
-    untouched — markers keep their sequences, so horizons only move
-    forward and re-compaction folds the previous compact set in.
-
-    Crash safety mirrors the ingest protocol: parts stage under
-    ``staging/compact-<prefix>``, the manifest lands via temp+rename
-    (the commit point), entry-time recovery finishes the publish and
-    the vacuum. The rewrite is verified (rows in == rows out) before
-    the manifest is written. Single-writer, same object-store caveat.
-
-    -> {"horizon": h, "prefix": p, "n_files_before": a, "n_files_after": b}
-    """
-    import glob
-    import json
-    import os
-
-    _recover_ingest_state(state_dir)
-    log = _commit_log(state_dir)
-    if not log:
-        raise ValueError(f"no committed ingest batches under {state_dir}")
-    horizon = log[-1][0] if up_to_seq is None else up_to_seq
-    old = _compaction_manifest(state_dir)
-    if old and horizon <= old["horizon"]:
-        raise ValueError(
-            f"horizon {horizon} does not advance past the existing "
-            f"compaction at {old['horizon']} (history below a horizon "
-            "is already truncated)"
-        )
-    prefixes = {tag for s, tag in log if s <= horizon}
-    if old:
-        prefixes.add(old["prefix"])
-    prefix = f"cp{horizon}"
-    stage = os.path.join(state_dir, "staging", f"compact-{prefix}")
-    n_before = 0
-    staged_any = False
-    for table in _COMPACTED_TABLES:
-        tdir = os.path.join(state_dir, table)
-        files = [
-            f for f in sorted(glob.glob(os.path.join(tdir, "*-part-*")))
-            if os.path.basename(f).split("-", 1)[0] in prefixes
-        ]
-        if not files:
-            continue
-        n_before += len(files)
-        src = spark.read.parquet(*files)
-        n_rows = src.count()
-        # size-derived output count (~128 MiB/file, the compaction
-        # module's convention) — fixed 1 would mean one giant file at
-        # 100 TB
-        total = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, -(-total // (128 << 20)))
-        tstage = os.path.join(stage, table)
-        src.coalesce(int(n_out)).write.mode("overwrite").parquet(tstage)
-        got = spark.read.parquet(tstage).count()
-        if got != n_rows:
-            raise RuntimeError(
-                f"compaction rewrite verification failed for {table}: "
-                f"{got} != {n_rows}"
-            )
-        staged_any = True
-    if not staged_any:
-        raise ValueError("nothing to compact below the requested horizon")
-    manifest = {
-        "horizon": horizon,
-        "prefix": prefix,
-        "replaced": sorted(prefixes),
-    }
-    tmp = os.path.join(state_dir, "_compaction.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(state_dir, "_compaction"))
-    _publish_compaction(state_dir, prefix)
-    _delete_replaced_parts(state_dir, manifest["replaced"])
-    return {
-        "horizon": horizon,
-        "prefix": prefix,
-        "n_files_before": n_before,
-        "n_files_after": sum(
-            len(glob.glob(
-                os.path.join(state_dir, t, f"{prefix}-part-*")
-            ))
-            for t in _COMPACTED_TABLES
-        ),
-    }
-
-
-def incremental_corpus_ingest(
-    new_docs: DataFrame,
-    state_dir: str,
-    weights: DataFrame,
-    url_col: str = "uri",
-    threshold: float = 0.5,
-    min_span: int = 16,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    n: int = 3,
-) -> DataFrame:
-    """O(delta) FORWARD-ONLY ingest of one document batch into a
-    persisted corpus — the production counterpart of
-    :func:`end_to_end_corpus` (r14). A 100 TB corpus is not rebuilt per
-    crawl; batches arrive and each must be refined against everything
-    already ingested WITHOUT rescanning it. Per batch the job reads the
-    new docs plus two small persisted indexes — never the corpus text:
-
-    - ``state_dir/keys``   (kind, k): every canonical-URL and exact-text
-      digest that has ever ARRIVED (~64 B/doc — the o(corpus) state that
-      makes exact stages incremental);
-    - ``state_dir/sigs``   MinHash signatures of every doc that reached
-      the near-dup stage, kept OR removed (indexing removed docs is what
-      preserves transitive removal across batches);
-    - ``state_dir/corpus`` the kept, span-scrubbed, gated output
-      (append-only; never read by ingest).
-
-    Stages mirror the batch pipeline: within-batch URL winner ->
-    cross-batch URL anti-join -> within-batch exact winner ->
-    cross-batch exact anti-join -> near-dup removal over
-    :func:`~compute_histogram_spark.operators.dedup.delta_candidates`
-    pairs (index x new and new x new only — old x old pairs are never
-    re-derived) resolved by the same min-label components ->
-    batch-local ExactSubstr span scrub -> quality gate.
-
-    SEMANTICS vs the batch form (documented, tested): under the
-    monotone-id ingest contract (doc_id increases with arrival, the
-    crawl-capture ordering) the URL/exact stages and any near-dup
-    group whose members pairwise collide make IDENTICAL keep decisions;
-    a chain-shaped component whose earliest member arrives between its
-    neighbors can differ (forward-only cannot retroactively unkeep),
-    and the span stage is batch-local — duplicate spans across batches
-    are not retroactively scrubbed from already-shipped docs. Both are
-    inherent to any no-reprocessing ingest, not implementation choices.
-
-    CRASH SAFETY (ADVICE r14): the three state appends commit
-    atomically as one batch. All outputs are staged under
-    ``state_dir/staging/<tag>`` (tag = content-derived digest of the
-    batch, so a retry resumes the SAME commit), a marker file in
-    ``state_dir/_commits`` is created only after staging completes, and
-    the staged part-files are then renamed into the flat tables under
-    collision-free tag-prefixed names. Entry runs a recovery scan
-    first: a staged batch WITH a marker is finish-published, one
-    WITHOUT is discarded. A crash anywhere therefore yields either
-    "nothing committed" (retry re-stages) or "fully committed" (retry
-    detects the marker and appends nothing) — never the half-committed
-    state where corpus rows were served without their blocking digests.
-    Single-writer protocol; renames are atomic on local/HDFS
-    filesystems (object stores should gate reads on the marker
-    instead).
-    """
-    import os
-
-    from compute_histogram_spark.operators.classify import score_filter
-    from compute_histogram_spark.operators.dedup import (
-        delta_candidates,
-        duplicate_span_removal,
-        minhash_signatures,
-        shingle_table,
-    )
-    from compute_histogram_spark.operators.graph import connected_components
-
-    spark = new_docs.sparkSession
-    keys_path = os.path.join(state_dir, "keys")
-    sigs_path = os.path.join(state_dir, "sigs")
-    # Finish or discard any crashed prior attempt BEFORE reading state:
-    # a committed-but-half-published batch may have corpus rows on disk
-    # whose blocking digests haven't landed in keys/ yet.
-    _recover_ingest_state(state_dir)
-    tag = _ingest_batch_tag(new_docs, url_col)
-    marker = os.path.join(state_dir, "_commits", tag)
-    committed = os.path.exists(marker)
-    has_keys = os.path.exists(os.path.join(keys_path, "_SUCCESS"))
-    has_sigs = os.path.exists(os.path.join(sigs_path, "_SUCCESS"))
-    keys = (
-        spark.read.parquet(keys_path)
-        if has_keys
-        else spark.createDataFrame([], "kind string, k string")
-    )
-
-    # 1+2. URL stage: earliest capture per canonical within the batch,
-    # then drop anything whose canonical digest has ever arrived
-    canon = new_docs.withColumn(
-        "uk", F.sha2(canonical_url(F.col(url_col)), 256)
-    )
-    w_url = canon.groupBy("uk").agg(F.min("doc_id").alias("doc_id"))
-    d1 = (
-        canon.join(w_url.select("doc_id"), "doc_id", "left_semi")
-        .join(
-            keys.where(F.col("kind") == "url")
-            .select(F.col("k").alias("uk")),
-            "uk",
-            "left_anti",
-        )
-        .withColumn("tk", F.sha2(F.col("text"), 256))
-    )
-    # d1 is consumed by the exact stage AND the key-state write below;
-    # checkpoint it so the second consumer replays a materialized form
-    # instead of re-reading keys_path AFTER this batch appended to it
-    # (the self-poisoning read the write ordering note below prices)
-    d1 = d1.localCheckpoint(eager=False)
-    # 3+4. exact stage, same shape on the text digest
-    w_txt = d1.groupBy("tk").agg(F.min("doc_id").alias("doc_id"))
-    d2 = (
-        d1.join(w_txt.select("doc_id"), "doc_id", "left_semi")
-        .join(
-            keys.where(F.col("kind") == "text")
-            .select(F.col("k").alias("tk")),
-            "tk",
-            "left_anti",
-        )
-        .select("doc_id", "text")
-    )
-    # the anti-joins above are lazily consumed three times below (sigs,
-    # state writes, output); localCheckpoint once so the batch's
-    # filtered form computes once
-    d2 = d2.localCheckpoint(eager=False)
-
-    # 5. near-dup: delta pairs against the signature index, min-label
-    # components; with monotone ids the component min is the earliest
-    # arrival, so "node != component" removes exactly the forward-only
-    # losers (old docs are never in d2, so only new docs can be dropped)
-    sigs_new = minhash_signatures(
-        shingle_table(d2, n=n, distinct=False), num_hashes
-    ).localCheckpoint(eager=False)
-    all_sigs = (
-        spark.read.parquet(sigs_path).unionByName(sigs_new)
-        if has_sigs
-        else sigs_new
-    )
-    pairs = delta_candidates(
-        all_sigs, d2.select("doc_id"), num_hashes, rows_per_band
-    )
-    losers = connected_components(pairs).where(
-        F.col("node") != F.col("component")
-    ).select(F.col("node").alias("doc_id"))
-    d3 = d2.join(losers, "doc_id", "left_anti")
-
-    # 6+7. batch-local span scrub, then the model-quality gate
-    out = score_filter(
-        duplicate_span_removal(d3, min_len=min_span),
-        weights,
-        threshold=threshold,
-    ).localCheckpoint(eager=False)
-
-    # state updates: every ARRIVED canonical/text digest (kept or not)
-    # blocks future copies; signatures of every doc that reached the
-    # near-dup stage preserve cross-batch transitivity
-    # anti-join against the existing index: a re-arrived TEXT under a
-    # fresh URL (crawl mirrors) passes the url stage, so its text digest
-    # would re-append and the key state would grow with every mirror —
-    # blocking semantics never cared (semi/anti joins ignore dup keys)
-    # but the uniqueness invariant and state size do (found r16 by the
-    # post-compaction continuity test)
-    new_keys = (
-        canon.select(F.lit("url").alias("kind"), F.col("uk").alias("k"))
-        .unionByName(
-            d1.select(F.lit("text").alias("kind"), F.col("tk").alias("k"))
-        )
-        .distinct()
-        .join(keys, ["kind", "k"], "left_anti")
-    )
-    # WRITE ORDER MATTERS: the output (whose lineage reads keys_path /
-    # sigs_path lazily) materializes FIRST (the staging write triggers
-    # its localCheckpoint); only then do the state mutations land.
-    # canon is re-derived for the url keys — it reads only the new
-    # batch, never state. All three writes go to staging and publish
-    # atomically behind the commit marker (see CRASH SAFETY above).
-    if committed:
-        # This exact batch already committed in a previous attempt —
-        # appending again would duplicate state. The returned frame is
-        # still meaningful (the anti-joins against the committed keys
-        # make it the already-ingested answer: empty for a pure retry).
-        return out
-    stage = os.path.join(state_dir, "staging", tag)
-    out.write.mode("overwrite").parquet(os.path.join(stage, "corpus"))
-    sigs_new.write.mode("overwrite").parquet(os.path.join(stage, "sigs"))
-    new_keys.write.mode("overwrite").parquet(os.path.join(stage, "keys"))
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    # r16: the marker carries an absolute commit sequence (enables
-    # read_corpus_as_of snapshot reads) and lands via temp+rename so a
-    # crash mid-write can never leave a torn marker that reads as
-    # committed. A retry of a committed batch never reaches here, so a
-    # seq is assigned exactly once per batch.
-    seq = 1 + max((s for s, _t in _commit_log(state_dir)), default=0)
-    tmp_marker = marker + ".tmp"
-    with open(tmp_marker, "w") as fh:
-        fh.write(f"{seq}\n{tag}")
-    os.replace(tmp_marker, marker)
-    _publish_staged(state_dir, tag)
-    return out
 
 
 def corpus_stats_arrow(docs: DataFrame) -> DataFrame:

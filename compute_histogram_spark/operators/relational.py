@@ -2055,16 +2055,16 @@ def supplier_part_counts(
     count(DISTINCT l_suppkey) per class is exact — partial distinct
     aggregation map-side, one shuffle on the class key.
 
-    r13 ADOPTED (tools/ab_q16_r13.py, sf10 min-of-3 interleaved,
-    value-exact): the class-ID indirection. The (brand, type, size)
-    class space is bounded (O(brands x types x sizes), never
-    data-scaled), so a dense int id broadcast onto part lets the
-    distinct shuffle move (class_id, suppkey) = two ints instead of
-    ~50 wide string bytes per fact row, and SHUFFLE_HASH on the part
-    join (the one star whose part side CANNOT broadcast — the
-    brand<>-filtered dim is ~80 MB at sf10) skips both SMJ sorts:
-    9.98 -> 7.22 s (-28%); class_id without the hint 8.50 s, hint
-    without class_id a wash (10.02) — both levers carry.
+    r13 ADOPTED (probe script tools/ab_q16_r13.py, in git history at
+    1ab15bf; sf10 min-of-3 interleaved, value-exact): the class-ID
+    indirection. The (brand, type, size) class space is bounded
+    (O(brands x types x sizes), never data-scaled), so a dense int id
+    broadcast onto part lets the distinct shuffle move (class_id,
+    suppkey) = two ints instead of ~50 wide string bytes per fact row,
+    and SHUFFLE_HASH on the part join (the one star whose part side
+    CANNOT broadcast — the brand<>-filtered dim is ~80 MB at sf10) skips
+    both SMJ sorts: 9.98 -> 7.22 s (-28%); class_id without the hint
+    8.50 s, hint without class_id a wash (10.02) — both levers carry.
     """
     # the excluded-supplier key slice rides the cardinality gate (r14):
     # the anti join otherwise plans against the pre-filter supplier file

@@ -1847,43 +1847,6 @@ def q_doc_fingerprint_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TX.doc_fingerprint_md5(load(spark, sf_dir, "documents"))
 
 
-# ---------------------------------------------------------------------------
-# multimodal (multimodal/binary.py): Arrow-batched mapInPandas feature
-# extraction over binary payloads. The stub decoder is deterministic
-# (sha256-derived dims), so even the Python-kernel path gets a value-exact
-# DuckDB oracle — the strongest check available without real codecs.
-# ---------------------------------------------------------------------------
-
-from compute_histogram_spark.multimodal import binary as MM  # noqa: E402
-
-
-def _mm_nib(i: int) -> str:
-    return f"(instr('0123456789abcdef', substr(h, {i}, 1)) - 1)"
-
-
-# rotated out r10 (sixth wave) — driver-green r02-r09; oracle kept
-# verbatim for tests/test_rotated_out.py (the multimodal tier stays
-# pytest-covered by the full codec fixture grids in tests/test_binary.py,
-# test_geotiff.py, test_mp3.py, test_aac_ogg.py, test_h264.py).
-MULTIMODAL_FEATURES_ORACLE = f"""
-    WITH a AS (
-        SELECT doc_id AS asset_id, 'image' AS kind, text FROM documents
-    ),
-    f AS (SELECT asset_id, kind, octet_length(encode(text)) AS n_bytes,
-                 sha256(text) AS h FROM a)
-    SELECT asset_id, kind, n_bytes, h AS sha256,
-           CAST(16 + ({_mm_nib(1)} * 16 + {_mm_nib(2)}) % 240 AS INT) AS width,
-           CAST(16 + ({_mm_nib(3)} * 16 + {_mm_nib(4)}) % 240 AS INT) AS height,
-           CAST(1 + ({_mm_nib(5)} * 16 + {_mm_nib(6)}) % 3 AS INT) AS n_channels
-    FROM f ORDER BY asset_id
-    """
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    assets = MM.assets_from_documents(load(spark, sf_dir, "documents"))
-    return MM.extract_features(assets).orderBy("asset_id")
-
-
 @register(
     "corpus_pipeline",
     """
@@ -1922,15 +1885,15 @@ def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, chained as ONE lazy plan (Catalyst fuses the stages; the dedup
     shuffle is the only wide dependency before the final per-lang agg).
 
-    r13 ADOPTED (tools/ab_corpus_r13.py, min-of-3 interleaved,
-    value-exact at both test SFs): per-doc stats computed map-side
-    BEFORE the dedup groupBy, so the shuffle carries (sha2, lang, three
-    ints) and never the text itself. At sf10 the three dedup-key shapes
-    are a wash (~1.2 s); at sf100 the byte diet separates decisively —
-    incumbent carry-the-text 7.66 s, groupBy(text) 6.10 s, THIS form
-    4.11 s (-46%) — the per-doc recompute on the 1000x-duplicated tile
-    is cheaper than shuffling distinct texts (and on low-dup real
-    crawls the trade only improves).
+    r13 ADOPTED (probe script tools/ab_corpus_r13.py, in git history at
+    0b3688e; min-of-3 interleaved, value-exact at both test SFs):
+    per-doc stats computed map-side BEFORE the dedup groupBy, so the
+    shuffle carries (sha2, lang, three ints) and never the text itself.
+    At sf10 the three dedup-key shapes are a wash (~1.2 s); at sf100 the
+    byte diet separates decisively — incumbent carry-the-text 7.66 s,
+    groupBy(text) 6.10 s, THIS form 4.11 s (-46%) — the per-doc
+    recompute on the 1000x-duplicated tile is cheaper than shuffling
+    distinct texts (and on low-dup real crawls the trade only improves).
 
     r15: the dedup key shuffles as 32 RAW BYTES (unhex of the sha2 hex)
     instead of the 64-char hex string — same byte-diet logic one level
@@ -2949,7 +2912,7 @@ def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ROTATION-READY (staged for the 7th wave, r11): URL-level crawl dedup.
 # Raw URLs are constructed deterministically from documents (the
-# multimodal_features derive-from-table pattern) with every
+# registry's derive-from-table pattern) with every
 # canonicalization hazard present — uppercase scheme/host, www., :443,
 # tracking params out of order, fragment, trailing slash — and the
 # oracle replicates the canonicalization STEPS (same regexes, list

@@ -62,73 +62,3 @@ def write_jsonl_shards(
         keyed = keyed.sortWithinPartitions("_h")
     keyed.drop("_h").write.mode("overwrite").json(path)
 
-
-def write_wet_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 16,
-    uri_col: str = "uri",
-    text_col: str = "text",
-    date: str = "2026-01-01T00:00:00Z",
-    prefix: str = "shard-",
-) -> None:
-    """Training-corpus export as WET-style WARC ``conversion`` records
-    (the Common Crawl extracted-text convention): ``n_shards`` files of
-    per-record gzip members, re-ingestable by the ``warcdocs`` source.
-
-    Sharding and order reuse :func:`write_jsonl_shards`'s determinism
-    argument verbatim — shard AND within-shard order come from an md5
-    digest of the URI, so two exports of the same corpus are
-    byte-identical (record IDs derive from the same digest; ``date`` is
-    caller-fixed, never wall-clock). Each task streams ITS partition
-    straight to one shard file — rows never pass through the driver —
-    then renames into place so a retried task can't leave a torn shard
-    (single-filesystem assumption, as sources/bucketing.py documents).
-    """
-    import os
-
-    from compute_histogram_spark.sources.warc import build_warc_record
-
-    os.makedirs(path, exist_ok=True)
-    digest = F.md5(F.concat(F.lit("wet:"), F.col(uri_col).cast("string")))
-    keyed = (
-        df.select(
-            F.col(uri_col).cast("string").alias("uri"),
-            F.col(text_col).cast("string").alias("text"),
-        )
-        .withColumn("_h", digest)
-        .repartition(n_shards, F.col("_h"))
-        .sortWithinPartitions("_h")
-    )
-
-    def _write(it):
-        import gzip as _gzip
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        final = os.path.join(path, f"{prefix}{pid:05d}.warc.gz")
-        tmp = final + f".inprogress-{TaskContext.get().taskAttemptId()}"
-        wrote = False
-        with open(tmp, "wb") as f:
-            for row in it:
-                body = (row["text"] or "").encode("utf-8")
-                rec = build_warc_record(
-                    warc_type="conversion",
-                    uri=row["uri"],
-                    date=date,
-                    record_id=f"<urn:md5:{row['_h']}>",
-                    content=body,
-                    extra_headers={"Content-Type": "text/plain"},
-                )
-                f.write(_gzip.compress(rec, mtime=0))
-                wrote = True
-        if wrote:
-            os.replace(tmp, final)
-        else:
-            os.remove(tmp)  # empty shard: no file, readers skip nothing
-        return iter(())
-
-    # empty-schema mapInPandas would batch rows; plain RDD mapPartitions is
-    # the right tool for a byte-stream side effect with zero output rows
-    keyed.rdd.mapPartitions(_write).count()

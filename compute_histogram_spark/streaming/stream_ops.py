@@ -976,8 +976,9 @@ def streaming_neardup_index(
     ``streaming_exact_dedup``'s 32-byte-key story; the drain harness
     keeps everything because a finite corpus wants the global index.
 
-    Cost trade (measured, tools/ab_minhash_stateless_r16.json): the
-    stateless array-HOF signature is ~19x slower per row than the batch
+    Cost trade (measured by tools/ab_minhash_stateless_r16.py, in git
+    history at 4cb6974; results in tools/ab_minhash_stateless_r16.json):
+    the stateless array-HOF signature is ~19x slower per row than the batch
     codegen'd explode+min form — acceptable HERE because streaming pays
     it per micro-batch DELTA, and the alternative (a second stateful
     aggregation) is illegal in one streaming query; batch keeps the

@@ -67,14 +67,14 @@ def test_embedding_neardup_blocking(spark):
 
 
 def test_incremental_minhash_index_equals_full_recompute(spark, sf_dir, tmp_path):
-    """Base index + appended delta + delta_candidates reconstructs exactly
-    the pairs a full recompute over the whole corpus finds."""
+    """Base index + appended delta holds exactly the signatures a full
+    recompute over the whole corpus produces, one row per document."""
     from pyspark.sql import functions as F
     from compute_histogram_spark.operators.dedup import (
         append_minhash_index,
         build_minhash_index,
-        delta_candidates,
-        minhash_candidates,
+        minhash_signatures,
+        shingle_table,
     )
     from compute_histogram_spark.sources.tables import load
 
@@ -84,22 +84,14 @@ def test_incremental_minhash_index_equals_full_recompute(spark, sf_dir, tmp_path
     idx = str(tmp_path / "mh_index")
 
     build_minhash_index(base, idx)
-    base_pairs = {(r[0], r[1]) for r in minhash_candidates(base).collect()}
-
     append_minhash_index(delta, idx)
     index_sigs = spark.read.parquet(idx)
     # index holds every doc exactly once after the append
     assert index_sigs.count() == docs.count()
-    new_pairs = {
-        (r[0], r[1])
-        for r in delta_candidates(index_sigs, delta.select("doc_id")).collect()
-    }
-    # delta pass only emits pairs touching a new doc
-    delta_ids = {r[0] for r in delta.select("doc_id").collect()}
-    assert all(a in delta_ids or b in delta_ids for a, b in new_pairs)
 
-    full_pairs = {(r[0], r[1]) for r in minhash_candidates(docs).collect()}
-    assert base_pairs | new_pairs == full_pairs
+    full = minhash_signatures(shingle_table(docs, distinct=False))
+    assert sorted(map(tuple, index_sigs.collect())) == \
+        sorted(map(tuple, full.collect()))
 
 
 def test_paragraph_dedup_golden(spark):

@@ -556,50 +556,30 @@ def test_url_dedup_collapses_variants(spark):
     assert out["https://example.com/b"].n_variants == 1
 
 
-def test_url_dedup_on_crawl_chain(spark, tmp_path):
-    """End-to-end with the WARC source: re-crawls of one page under
-    tracking-param URL variants collapse by canonical URL before any
+def test_url_dedup_on_crawl_chain(spark):
+    """Re-crawls of one page under tracking-param URL variants, in crawl
+    order, collapse by canonical URL to the earliest capture before any
     payload byte is hashed."""
-    import os
-
     from pyspark.sql import functions as F
 
     from compute_histogram_spark.operators.pipeline import url_dedup
-    from compute_histogram_spark.sources.warc import (
-        WarcDocsDataSource,
-        build_http_response,
-        build_warc,
-        build_warc_record,
-    )
 
-    spark.dataSource.register(WarcDocsDataSource)
-    recs = [
-        build_warc_record(
-            warc_type="response",
-            uri=u,
-            content=build_http_response(b"<html><p>same page body</p></html>"),
-        )
-        for u in (
-            "https://www.example.com/page?utm_source=a",
-            "https://example.com/page?utm_source=b",
-            "https://example.com/page/",
-            "https://example.com/other",
-        )
-    ]
-    p = os.path.join(str(tmp_path), "seg-00000.warc.gz")
-    with open(p, "wb") as f:
-        f.write(build_warc(recs, gzip_per_record=True))
-    docs = (
-        spark.read.format("warcdocs").option("path", str(tmp_path)).load()
-        .where(F.col("parsed"))
-        .select(
-            F.monotonically_increasing_id().alias("doc_id"),
-            F.col("target_uri").alias("uri"),
-        )
+    uris = (
+        "https://www.example.com/page?utm_source=a",
+        "https://example.com/page?utm_source=b",
+        "https://example.com/page/",
+        "https://example.com/other",
+    )
+    docs = spark.createDataFrame(
+        [(i, u, "<html><p>same page body</p></html>")
+         for i, u in enumerate(uris)],
+        "doc_id long, uri string, text string",
     )
     out = url_dedup(docs)
     assert out.count() == 2  # page (3 variants) + other
     assert out.agg(F.sum("n_variants")).first()[0] == 4
+    page = out.where(F.col("canonical_url") == "https://example.com/page")
+    assert page.first().doc_id == 0
 
 
 def test_url_dedup_duckdb_twin(spark, sf_dir):

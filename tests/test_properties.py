@@ -402,7 +402,6 @@ def test_jpeg_corrupt_bytes_never_crash_weirdly(data):
     from compute_histogram_spark.multimodal.jpeg import (
         decode_jpeg,
         encode_jpeg_baseline,
-        encode_jpeg_progressive,
         jpeg_info,
     )
 
@@ -410,25 +409,16 @@ def test_jpeg_corrupt_bytes_never_crash_weirdly(data):
     gray = data.draw(st.booleans())
     shape = (24, 24) if gray else (24, 24, 3)
     img = np.clip(rng.normal(128, 30, size=shape), 0, 255).astype(np.uint8)
-    progressive = data.draw(st.booleans())
-    if progressive:
-        sub = "4:4:4" if gray else data.draw(
-            st.sampled_from(["4:4:4", "4:2:0"])
-        )
-        blob = bytearray(
-            encode_jpeg_progressive(img, quality=85, subsampling=sub)
-        )
-    else:
-        sub = (
-            "4:4:4"
-            if gray
-            else data.draw(st.sampled_from(["4:4:4", "4:2:2", "4:2:0"]))
-        )
-        ri = data.draw(st.sampled_from([0, 2]))
-        blob = bytearray(
-            encode_jpeg_baseline(img, quality=85, subsampling=sub,
-                                 restart_interval=ri)
-        )
+    sub = (
+        "4:4:4"
+        if gray
+        else data.draw(st.sampled_from(["4:4:4", "4:2:2", "4:2:0"]))
+    )
+    ri = data.draw(st.sampled_from([0, 2]))
+    blob = bytearray(
+        encode_jpeg_baseline(img, quality=85, subsampling=sub,
+                             restart_interval=ri)
+    )
     pos = data.draw(st.integers(0, len(blob) - 1))
     bit = data.draw(st.integers(0, 7))
     blob[pos] ^= 1 << bit

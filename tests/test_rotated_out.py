@@ -416,9 +416,8 @@ def test_similarity_topk_ivf_oracle(spark, sf_dir, con):
 
 
 # --- sixth rotation wave (r10): fuzzy_name_pairs / promo_revenue_share /
-# --- dedup_embedding / multimodal_features swap out for event_pagerank /
-# --- distinct_users_kmv / token_cms / similarity_topk_pq; their full
-# --- oracles continue here.
+# --- dedup_embedding swap out for event_pagerank / distinct_users_kmv /
+# --- token_cms / similarity_topk_pq; their full oracles continue here.
 
 
 def test_fuzzy_name_pairs_oracle(spark, sf_dir, con):
@@ -449,16 +448,6 @@ def test_dedup_embedding_oracle(spark, sf_dir, con):
 
     _check("dedup_embedding", q_dedup_embedding(spark, sf_dir), con,
            DEDUP_EMBEDDING_ORACLE)
-
-
-def test_multimodal_features_oracle(spark, sf_dir, con):
-    from compute_histogram_spark.registry import (
-        MULTIMODAL_FEATURES_ORACLE,
-        q_multimodal_features,
-    )
-
-    _check("multimodal_features", q_multimodal_features(spark, sf_dir), con,
-           MULTIMODAL_FEATURES_ORACLE)
 
 
 # --- seventh rotation wave (r11): shipping_priority / similarity_topk_sq /

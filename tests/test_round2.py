@@ -425,24 +425,6 @@ def test_cms_build_plan_has_map_side_combine(spark, sf_dir):
     assert "hashpartitioning" in plan
 
 
-def test_delta_candidates_plan_broadcasts_the_delta(spark, sf_dir):
-    """Incremental dedup joins the SMALL new-batch side as a broadcast
-    semi-join against the index; the index side never re-shuffles for it."""
-    from pyspark.sql import functions as F
-    from compute_histogram_spark.operators.dedup import (
-        delta_candidates,
-        minhash_signatures,
-        shingle_table,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(shingle_table(docs, distinct=False))
-    new_ids = docs.where(F.col("doc_id") % 5 == 0).select("doc_id")
-    plan = _plan_of(delta_candidates(sigs, new_ids))
-    assert "BroadcastHashJoin" in plan
-    assert "LeftSemi" in plan
-
-
 # ---------------------------------------------------------------------------
 # RANGE-frame rolling window: golden + DuckDB twin
 # ---------------------------------------------------------------------------

@@ -97,7 +97,6 @@ NLJ_ALLOWED = {
 }
 # pure-Python kernel paths: no codegen span expected
 PY_KERNEL = {
-    "multimodal_features",
     "similarity_topk_gemm",
     "doc_fingerprint_arrow",
     "text_profile_arrow",
