@@ -35,7 +35,7 @@ from compute_histogram_spark.operators.histogram import (
     histogram,
     merge_histograms,
 )
-from compute_histogram_spark.operators.deciles import deciles, deciles_sql
+from compute_histogram_spark.operators.deciles import deciles
 
 __version__ = "0.1.0"
 
@@ -46,5 +46,4 @@ __all__ = [
     "histogram",
     "merge_histograms",
     "deciles",
-    "deciles_sql",
 ]

@@ -49,9 +49,11 @@ def minhash_aggs(shingle_col: str, num_hashes: int) -> list[Column]:
     per seed, ~100 ms of every minhash-family query BUILD at any scale;
     ``F.expr`` parses the same tree JVM-side in one round trip).
     Identical analyzed plan, value-identity pinned by every existing
-    signature test."""
+    signature test. The column name is backtick-quoted, so names with
+    spaces or punctuation parse as one identifier."""
+    col = "`" + shingle_col.replace("`", "``") + "`"
     return [
-        F.expr(f"min(md5(concat('{i}:', {shingle_col}))) AS mh{i}")
+        F.expr(f"min(md5(concat('{i}:', {col}))) AS mh{i}")
         for i in range(num_hashes)
     ]
 

@@ -6,12 +6,12 @@
     select floor((sum(count) over (order by value) / total) * 10) as pct, ...
     group by pct order by min(value)
 
-Two twins are provided (SURVEY §2.3, §7 M2):
-
-- :func:`deciles_sql` — the query as Spark SQL text, structurally the
-  reference file with aliased outputs (CTE + scalar agg + cross join +
-  running-sum window + floor bucket + group agg + order-by-aggregate).
-- :func:`deciles` — the same plan through the DataFrame/Window API.
+:func:`deciles` answers it in ONE ordered pass: the scalar total comes
+from an unbounded window frame over the same ordering the running sum
+needs, so both Window operators share one Sort and the reference's
+scalar-aggregate job and cross join (``FROM histo, s``) never run. Its
+value-equality with the verbatim reference SQL is pinned in
+tests/test_deciles.py.
 
 Scale note: the running ``sum() OVER (ORDER BY value)`` is a global ordered
 window — a single-partition sort. That is correct here because its input is
@@ -24,67 +24,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-_DECILE_SQL = """
-WITH s AS (SELECT sum(pixel_count) AS total FROM {table}),
-c AS (
-    SELECT value, pixel_count, total,
-           sum(pixel_count) OVER (ORDER BY value) AS cum
-    FROM {table}, s
-)
-SELECT CAST(floor((cum / total) * 10) AS BIGINT) * 10 AS percentile,
-       min(value)        AS min_value,
-       max(value)        AS max_value,
-       sum(pixel_count)  AS bucket_count
-FROM c
-GROUP BY floor((cum / total) * 10)
-ORDER BY min_value
-"""
-
-
-def deciles_sql(histo: DataFrame, view_name: str = "histo") -> DataFrame:
-    """Run the reference decile query as Spark SQL over a histogram DF
-    with columns ``(value, pixel_count)``."""
-    histo.createOrReplaceTempView(view_name)
-    return histo.sparkSession.sql(_DECILE_SQL.format(table=view_name))
-
 
 def deciles(histo: DataFrame) -> DataFrame:
-    """DataFrame/Window twin of :func:`deciles_sql` (same output schema)."""
-    total = histo.agg(F.sum("pixel_count").alias("total"))
-    # comma-join with the 1-row scalar aggregate (compute_histogram.sql:2) —
-    # broadcast nested-loop join of a single row, negligible at any scale.
-    w = Window.orderBy("value")  # RANGE UNBOUNDED PRECEDING..CURRENT ROW
-    cum = (
-        histo.crossJoin(F.broadcast(total))
-        .withColumn("cum", F.sum("pixel_count").over(w))
-        .withColumn("pct", F.floor((F.col("cum") / F.col("total")) * 10))
-    )
-    return (
-        cum.groupBy("pct")
-        .agg(
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-            F.sum("pixel_count").alias("bucket_count"),
-        )
-        .select(
-            (F.col("pct").cast("bigint") * 10).alias("percentile"),
-            "min_value",
-            "max_value",
-            "bucket_count",
-        )
-        .orderBy("min_value")
-    )
-
-
-def deciles_fused(histo: DataFrame) -> DataFrame:
-    """Value-identical to :func:`deciles` / :func:`deciles_sql` in ONE
-    ordered pass: the scalar total comes from an unbounded frame over the
-    SAME single-partition ordering the running sum already needs, so the
-    separate scalar-aggregate job and its cross join disappear (two
-    Window operators share one Sort, zero extra Exchange). The parity
-    forms above keep the reference's SQL structure; this is the plan a
-    Spark engine actually wants — equality is pinned in
-    tests/test_deciles.py at both test SFs."""
+    """Deciles of a histogram DF with columns ``(value, pixel_count)`` ->
+    ``(percentile BIGINT, min_value, max_value, bucket_count)``, ordered by
+    ``min_value``. One ordered pass: the running sum and the
+    unbounded-frame total share one Sort, zero extra Exchange."""
     w = Window.orderBy("value")
     wt = Window.orderBy("value").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing

@@ -1,6 +1,7 @@
 """Deduplication suite for a training-data pipeline, over ``documents``.
 
-Five methods, all expressed as declarative DataFrame plans:
+Methods, all DataFrame plans (only the n-gram Jaccard pair step runs a
+Python/Arrow kernel):
 
 - :func:`exact_dedup` — content-hash groupBy. The hash (sha2-256) is the
   shuffle key, so identical documents land in one reducer regardless of
@@ -11,10 +12,11 @@ Five methods, all expressed as declarative DataFrame plans:
   digests -> self-equi-join on (band_id, band_hash). The join is an
   *equi*-join on a hash key: at 100 TB Spark hash-partitions both sides, and
   only same-bucket docs ever meet — the O(n^2) pair space is never formed.
-- :func:`ngram_jaccard_pairs` — exact Jaccard via shingle-inverted-index
-  self-join (count shared shingles, join per-doc sizes). Pair cardinality is
-  bounded by shared-shingle co-occurrence, not n^2; stop-shingle capping
-  (drop shingles in > ``max_df`` docs) keeps hub shingles from exploding it.
+- :func:`ngram_jaccard_pairs` — exact Jaccard via a shingle postings list
+  (count shared shingles per pair in a vectorized Arrow kernel, join
+  per-doc sizes). Pair cardinality is bounded by shared-shingle
+  co-occurrence, not n^2; stop-shingle capping (drop shingles in >
+  ``max_df`` docs) keeps hub shingles from exploding it.
 - :func:`simhash` — 16-bit frequency-weighted SimHash from md5 nibble bits;
   near-dups differ in <= ~2 bits. One explode + two groupBys, all integer.
 - :func:`embedding_neardup_pairs` (operators/similarity.py uses the same
@@ -225,151 +227,56 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     n: int = 3,
     max_df: int | None = None,
-    hub_prefilter: bool = False,
 ) -> DataFrame:
-    """Exact Jaccard >= threshold via inverted-index self-join.
+    """Exact Jaccard >= threshold over word n-gram shingle sets, via a
+    shingle postings list and a vectorized pair kernel.
 
     Shingle strings are collapsed to ``xxhash64`` longs BEFORE any shuffle:
     every downstream exchange and join compares 8-byte keys instead of
-    ~20-40-byte strings (the distinct, the self-join, and the pair count all
-    shuffle, so this cuts total shuffle bytes several-fold at scale).
-    Jaccard over hashed shingles equals Jaccard over strings absent a
-    64-bit collision inside one document pair's shingle sets — odds are
-    ~m^2/2^64 for m shingles/doc, i.e. negligible even at 100 TB.
+    ~20-40-byte strings. Jaccard over hashed shingles equals Jaccard over
+    strings absent a 64-bit collision inside one document pair's shingle
+    sets — odds are ~m^2/2^64 for m shingles/doc, negligible even at
+    100 TB.
 
     ``max_df`` drops shingles appearing in more than that many docs (hub
     shingles contribute pairs quadratically but little signal) — the lever
-    that keeps this exact method viable at scale.
-    """
-    sh = shingle_table(docs, n=n, distinct=False).select(
-        "doc_id", F.xxhash64("s").alias("h")
-    )
-    if max_df is not None and hub_prefilter:
-        # two-phase hub removal for HUB-HEAVY corpora: count df first (a
-        # partial-agg-friendly shuffle of (8-byte key, count) rows),
-        # broadcast the hub set (few by construction — the heavy-hitter
-        # tail) and anti-join it away BEFORE postings are collected, so no
-        # reducer ever materializes a hub's full posting list. Costs one
-        # extra scan + one small shuffle — pay it when boilerplate df x 8
-        # bytes approaches executor memory; below that the single-pass
-        # post-collect cap (default) wins.
-        hubs = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")).where(
-            F.col("df") > max_df
-        )
-        sh = sh.join(F.broadcast(hubs.select("h")), "h", "left_anti")
-    # postings-list plan: ONE groupBy builds the per-shingle doc set
-    # (collect_set dedups in-place — no separate distinct shuffle), then
-    # every co-occurring ordered pair is generated MAP-SIDE from the sorted
-    # array and only (doc_1, doc_2) partial counts shuffle. Work is
-    # sum-over-shingles C(df, 2) — identical to the self-join's output, but
-    # the join's full probe-side shuffle and pairwise hash probing are gone.
-    posts = sh.groupBy("h").agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
-    if max_df is not None and not hub_prefilter:
-        # single-pass df cap: hubs are dropped AFTER their posting set is
-        # grouped — value-identical to the prefilter (pinned in tests),
-        # one shuffle cheaper, viable until a single hub's postings strain
-        # one reducer (then flip hub_prefilter=True).
-        posts = posts.where(F.size("ds") <= max_df)
-    sizes = (
-        posts.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS d1, y AS d2))))"
-    )
-    inter = (
-        posts.where(F.size("ds") >= 2)
-        .select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.d1").alias("doc_id_1"), F.col("p.d2").alias("doc_id_2"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    # SHUFFLE_HASH on the sizes side: the static estimator thinks the
-    # twice-aggregated pair table is tiny and BROADCASTS it (an 11M-row
-    # hashed relation at sf1 — measured 2x the whole query; AQE cannot
-    # demote a statically planned broadcast). A shuffled hash join streams
-    # the pair table against a per-partition build of the doc-size table —
-    # no sort, no broadcast of either data-scaled side, valid at any
-    # corpus size. sf1: 10.3s -> 5.0s, output identical (oracle-pinned).
-    s1 = sizes.withColumnsRenamed({"doc_id": "doc_id_1", "n_sh": "n1"}).hint(
-        "shuffle_hash"
-    )
-    s2 = sizes.withColumnsRenamed({"doc_id": "doc_id_2", "n_sh": "n2"}).hint(
-        "shuffle_hash"
-    )
-    return (
-        inter.join(s1, "doc_id_1")
-        .join(s2, "doc_id_2")
-        .withColumn(
-            "jaccard",
-            F.round(
-                (F.col("n_inter") * 1.0)
-                / (F.col("n1") + F.col("n2") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_id_1", "doc_id_2", "jaccard")
-        .orderBy("doc_id_1", "doc_id_2")
-    )
+    that keeps this exact method viable at scale. Hubs are dropped after
+    their posting set is grouped (one shuffle, no separate df count).
 
+    Plan, in order:
 
-def ngram_jaccard_pairs_arrow(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Value-identical fast form of :func:`ngram_jaccard_pairs` — the
-    r11 attack on the one text-family row the comparator still won at
-    sf10 (VERDICT r10 #3), built with the Arrow-kernel playbook that
-    fixed doc_fingerprint in r10. Interleaved sf10 A/B: 22.7 s vs
-    34.6 s for the declarative form (DuckDB 18.0 s same box/day) —
-    the gap closes from 1.68x to ~1.26x.
-
-    Three measured changes vs the declarative plan (each A/B'd at sf10
-    before adoption; a fourth — rebuilding postings doc-major so sizes
-    ride the posting lists — was measured and REJECTED: the
-    collect_set -> explode -> re-aggregate roundtrip cost 26 s against
-    4.5 s for the direct shingle-major groupBy):
-
-    1. **One materialization of the postings** — the old plan
-       recomputed shingle build + postings for the sizes branch
-       (~4.5 s at sf10); posts is localCheckpointed once and feeds
-       both the sizes aggregate and pair generation.
-    2. **Vectorized pair generation** — Spark evaluates the
-       flatten/transform pair lambda INTERPRETED (~6.2 s at sf10 for
-       the 126M pairs); the kernel emits the same ordered pairs from
-       NumPy passes per batch (upper-triangle index templates per
-       list size) in ~2.1 s. Input lists are array_sort'ed, so
-       template pairs are (d1 < d2) exactly like the lambda's.
+    1. **Postings, materialized once** — ONE groupBy builds the sorted
+       per-shingle doc set (``collect_set`` dedups in place, no separate
+       distinct shuffle); it is localCheckpointed lazily and feeds both
+       the per-doc size aggregate and pair generation, so the shingle
+       build never runs twice.
+    2. **Vectorized pair generation** — a mapInArrow kernel reads each
+       batch's ListArray (values, offsets) buffers as flat NumPy views
+       and emits every co-occurring ordered pair (d1 < d2, the lists are
+       sorted) from upper-triangle index templates per list size. Work
+       is sum-over-shingles C(df, 2); only (d1, d2) partial counts
+       shuffle.
     3. **Necessary-condition filter between the size joins** —
-       jaccard <= n_inter/n1 (the intersection can't exceed either
-       set), so requiring n_inter >= (threshold - 1e-6) * n1 right
-       after the first join drops ~113M candidate rows to the
-       near-output set before the second join. The 1e-6 margin keeps
-       pairs whose unrounded jaccard sits in the round-half-up window
-       below the threshold (output rounds to 6 decimals before the
-       final compare), so no pair the declarative form emits is ever
+       jaccard <= n_inter/n1 (the intersection can't exceed either set),
+       so requiring n_inter >= (threshold - 1e-6) * n1 right after the
+       first join drops the bulk of the candidate rows before the second
+       join. The 1e-6 margin keeps pairs whose unrounded jaccard sits in
+       the round-half-up window below the threshold (output rounds to 6
+       decimals before the final compare), so no qualifying pair is
        dropped.
 
-    Scale shape: unchanged — the same hash shuffles as the declarative
-    form minus the recompute, and the second size join now processes
-    survivors instead of the full pair table. Equality is pinned in
-    tests/test_dedup.py at both test SFs and on hub-binding
-    synthetics.
+    Both size joins are SHUFFLE_HASH-hinted: the static estimator thinks
+    the twice-aggregated pair table is tiny and would BROADCAST it, and
+    AQE cannot demote a statically planned broadcast.
 
-    r17 (guide §4.2): the pair kernel moved mapInPandas → mapInArrow.
-    The pandas boundary materialized the postings column as an OBJECT
-    series (one Python list per row, re-concatenated in Python); the
-    ListArray's (values, offsets) buffers are now read directly as two
-    flat NumPy views and the output batches are built from NumPy
-    without a DataFrame. Interleaved one-JVM A/B (noop sink, warm):
-    sf10 25.9 → 22.9 s (-11%, all three sample pairs agree); sf0.1/sf1
-    tie within jitter (1.55/1.59 and 3.03/2.94 min) — the win scales
-    with pair volume. Values verified equal at sf0.1 and sf1 in the
-    A/B itself plus the standing equality pins."""
+    Measured against the earlier all-JVM plan (interpreted
+    flatten/transform pair lambda, postings recomputed for the sizes
+    branch; git history keeps it), values identical: sf10 22.7 vs 34.6 s,
+    sf0.1 2.27 vs 3.44 s. Rebuilding postings doc-major so sizes ride the
+    posting lists was measured and rejected (26 s against 4.5 s for the
+    shingle-major groupBy at sf10). Values are pinned against the DuckDB
+    oracle and a brute-force set Jaccard in tests/test_dedup.py.
+    """
     import numpy as np
 
     sh = shingle_table(docs, n=n, distinct=False).select(
@@ -393,13 +300,8 @@ def ngram_jaccard_pairs_arrow(
     )
 
     def kernel(batches):
-        # r17 (guide §4.2): Arrow-native. The r16 mapInPandas form
-        # received the postings column as a pandas OBJECT series — one
-        # Python list-of-ndarray per row, concatenated row-by-row in
-        # Python. A ListArray is already (values buffer, offsets
-        # buffer): read both as flat int64/int32 NumPy views, zero
-        # per-row Python objects. Same ordered pairs by construction
-        # (identical template math over identical starts).
+        # A ListArray is already (values buffer, offsets buffer): read
+        # both as flat int64 NumPy views, zero per-row Python objects.
         import pyarrow as pa
 
         for rb in batches:

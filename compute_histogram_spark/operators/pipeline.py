@@ -848,140 +848,3 @@ def end_to_end_corpus(
     defer_release(out, d3)  # caller frees d3 after its action
     return (out, obs) if with_metrics else out
 
-
-def corpus_stats_arrow(docs: DataFrame) -> DataFrame:
-    """Arrow-batch twin of the corpus_pipeline per-doc map stage (r16,
-    VERDICT r15 #7 A/B): sha256 digest + n_chars + n_tokens +
-    stopword_ratio in ONE pass over Arrow batches, replacing the JVM
-    split + higher-order-function stopword filter (the
-    text_profile_arrow precedent — the JVM expression path, not Spark,
-    owns that kernel floor). Identical values: the digest is hashlib
-    sha256 over UTF-8 (it is only a grouping key, never output), token
-    split is ``str.split(' ')`` == Spark ``split(text, ' ')`` limit=-1,
-    and rounding is the parity-pinned ``_rhu6`` HALF_UP twin. Pure map,
-    no shuffle — fans out with the scan at any scale."""
-    import pandas as pd
-
-    def kernel(batches):
-        import hashlib
-
-        import numpy as np
-
-        from compute_histogram_spark.operators.text import (
-            STOPWORDS,
-            _rhu6,
-            _tok64_const,
-        )
-
-        stop64 = np.array([_tok64_const(w) for w in STOPWORDS], np.uint64)
-        stopset = set(STOPWORDS)
-        for pdf in batches:
-            texts = pdf["text"].values.tolist()
-            n = len(texts)
-            h = np.empty(n, object)
-            o_chars = np.zeros(n, np.int64)
-            o_tok = np.zeros(n, np.int64)
-            o_sr = np.zeros(n)
-            nulls, clean, bufs, lens = [], [], [], []
-            for i, t in enumerate(texts):
-                if t is None:
-                    nulls.append(i)
-                    continue
-                b = t.encode()
-                h[i] = hashlib.sha256(b).digest()
-                if (
-                    t and t.isascii() and t[0] != " " and t[-1] != " "
-                    and "  " not in t and "\x00" not in t
-                ):
-                    clean.append(i)
-                    bufs.append(b)
-                    lens.append(len(t))
-                else:
-                    # exact scalar fallback (the _tp_batch exclusions:
-                    # empty / non-ASCII / edge or double spaces / NUL)
-                    toks = t.split(" ")
-                    o_chars[i] = len(t)
-                    o_tok[i] = len(toks)
-                    o_sr[i] = _rhu6(
-                        np.float64(sum(1 for x in toks if x in stopset))
-                        / len(toks)
-                    )
-            if clean:
-                # same uint64-view token matcher as text._tp_batch: one
-                # byte buffer, reduceat per-doc sums
-                lens_a = np.array(lens, np.int64)
-                starts = np.zeros(len(lens_a), np.int64)
-                np.cumsum(lens_a[:-1], out=starts[1:])
-                ends = starts + lens_a
-                a = np.frombuffer(b"".join(bufs), np.uint8)
-                ci = np.array(clean)
-                space = a == 32
-                nsp = np.add.reduceat(space, starts)
-                ntok = nsp + 1  # clean docs: no empty tokens
-                o_chars[ci] = lens_a
-                o_tok[ci] = ntok
-                sp = np.flatnonzero(space)
-                tstart = np.sort(np.concatenate([starts, sp + 1]))
-                tend = np.sort(np.concatenate([sp, ends]))
-                tlen = tend - tstart
-                tdoc = np.searchsorted(starts, tstart, side="right") - 1
-                ap = np.concatenate([a, np.zeros(8, np.uint8)])
-                vals = ap[tstart[:, None] + np.arange(8)]
-                vals = vals * (np.arange(8) < tlen[:, None])
-                t64 = vals.copy().view(np.uint64).ravel()
-                t64 = np.where(
-                    tlen <= 8, t64, np.uint64(0xFFFFFFFFFFFFFFFF)
-                )
-                stop_cnt = np.bincount(
-                    tdoc[np.isin(t64, stop64)], minlength=len(lens_a)
-                )
-                o_sr[ci] = _rhu6(stop_cnt.astype(np.float64) / ntok)
-            out = {
-                "h": h,
-                "lang": pdf["lang"].values,
-                "doc_id": pdf["doc_id"].values,
-                "n_chars": o_chars,
-                "n_tokens": o_tok,
-                "stopword_ratio": o_sr,
-            }
-            if nulls:
-                for c in ("n_chars", "n_tokens", "stopword_ratio"):
-                    col = out[c].astype(object)
-                    for i in nulls:
-                        col[i] = None
-                    out[c] = col
-            yield pd.DataFrame(out)
-
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        kernel,
-        "h binary, lang string, doc_id bigint, n_chars bigint, "
-        "n_tokens bigint, stopword_ratio double",
-    )
-
-
-def corpus_pipeline_arrow(docs: DataFrame) -> DataFrame:
-    """corpus_pipeline with the per-doc map stage on the Arrow kernel —
-    the dedup groupBy and final per-lang aggregate are IDENTICAL to the
-    declarative form (registry.q_corpus_pipeline); only the map work
-    under them moves off the JVM expression path."""
-    per_doc = corpus_stats_arrow(docs)
-    kept = per_doc.groupBy("h", "lang").agg(
-        F.min("doc_id").alias("doc_id"),
-        F.count(F.lit(1)).alias("n_copies"),
-        F.first("n_chars").alias("n_chars"),
-        F.first("n_tokens").alias("n_tokens"),
-        F.first("stopword_ratio").alias("stopword_ratio"),
-    )
-    f = kept.where(
-        (F.col("n_tokens") >= 5) & (F.col("stopword_ratio") <= 0.5)
-    )
-    return (
-        f.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            (F.sum("n_copies") - F.count(F.lit(1))).alias("n_dupes_removed"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.sum("n_chars").alias("total_chars"),
-        )
-        .orderBy("lang")
-    )

@@ -501,26 +501,6 @@ def top_tokens(docs: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def normalize_text(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Standard LLM-corpus normalization, entirely JVM-side expressions:
-    lowercase -> strip non-alphanumeric (keeping CJK + spaces) -> collapse
-    whitespace runs -> trim. Adds ``norm_text`` + ``norm_len``; original
-    column untouched (normalization is a VIEW for dedup/filtering keys, not
-    a destructive rewrite — keep raw bytes for training)."""
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(
-                F.lower(F.col(text_col)), r"[^a-z0-9一-鿿 ]", " "
-            ),
-            r" +",
-            " ",
-        )
-    )
-    return docs.withColumns(
-        {"norm_text": norm, "norm_len": F.length(norm)}
-    )
-
-
 def quality_signals(docs: DataFrame) -> DataFrame:
     """Gopher-style per-document quality + repetition signals
     (Rae et al. 2021, "Scaling Language Models: ... Gopher", §A1.1),

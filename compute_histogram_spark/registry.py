@@ -190,7 +190,7 @@ ORDER BY min_value
 @register("histogram_deciles", _DECILES_ORACLE)
 def q_histogram_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     histo = H.histogram(load(spark, sf_dir, "events"), "value", "linear")
-    return D.deciles_sql(histo)
+    return D.deciles(histo)
 
 
 # ---------------------------------------------------------------------------
@@ -910,7 +910,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_df SET (VERDICT r01 #2): shingles in > max_df documents are hub/
     # boilerplate — they contribute candidate pairs quadratically in df but
     # ~zero Jaccard signal, and the cap is the lever that keeps the exact
-    # inverted-index method viable at scale (operators/dedup.py:126). At
+    # inverted-index method viable at scale (dedup.ngram_jaccard_pairs). At
     # 100 docs (20% of the sf0.01 corpus; scale-invariant in spirit: any
     # shingle that common is boilerplate at every sf) the pair space stays
     # bounded by rare-shingle co-occurrence. Capping semantics are

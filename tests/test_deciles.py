@@ -1,9 +1,9 @@
-"""Decile query (compute_histogram.sql:1-3): SQL twin vs Window twin, plus
-the verbatim reference SQL text executed by Spark SQL."""
+"""Decile query (compute_histogram.sql:1-3): the Window-API operator vs the
+verbatim reference SQL text executed by Spark SQL."""
 
 from pyspark.sql import Row
 
-from compute_histogram_spark import deciles, deciles_sql
+from compute_histogram_spark import deciles
 from compute_histogram_spark.operators.deciles import quantiles
 
 HISTO = [  # (value, pixel_count) incl. zero bins
@@ -15,31 +15,46 @@ HISTO = [  # (value, pixel_count) incl. zero bins
     (0.5, 40),
 ]
 
+# the reference file's exact text, modulo the column name `count`
+REFERENCE_SQL = (
+    "with s as (select sum(count) as total from histo) "
+    "select pct * 10 as percentile, min(value), max(value), sum(count) as count "
+    "from (select value, count, floor((sum(count) over (order by value) / total) * 10) as pct "
+    "from histo, s) group by pct order by min(value)"
+)
+
 
 def histo_df(spark):
     return spark.createDataFrame([Row(value=v, pixel_count=c) for v, c in HISTO])
 
 
-def test_sql_and_window_twins_agree(spark):
+def reference_rows(spark, h):
+    h.select("value", "pixel_count").withColumnRenamed(
+        "pixel_count", "count"
+    ).createOrReplaceTempView("histo")
+    return spark.sql(REFERENCE_SQL).collect()
+
+
+def test_sql_and_window_twins_agree(spark, sf_dir):
+    """deciles (one ordered pass, no scalar-agg + cross join) is
+    value-equal to the verbatim reference SQL on the synthetic histogram
+    (zero bins included) AND the real events histogram at the test SF."""
+    from compute_histogram_spark.operators.histogram import histogram
+    from compute_histogram_spark.sources.tables import load
+
     h = histo_df(spark)
-    a = [tuple(r) for r in deciles_sql(h).collect()]
-    b = [tuple(r) for r in deciles(h).collect()]
-    assert a == b
+    a = [tuple(r) for r in deciles(h).collect()]
+    assert a == [tuple(r) for r in reference_rows(spark, h)]
     # totals preserved
     assert sum(r[3] for r in a) == 100
+    hr = histogram(load(spark, sf_dir, "events"), "value", "linear")
+    b = [tuple(r) for r in deciles(hr).collect()]
+    assert b == [tuple(r) for r in reference_rows(spark, hr)]
+    assert len(b) > 1
 
 
 def test_reference_sql_verbatim(spark):
-    # the reference file's exact text, modulo the column name `count`
-    h = histo_df(spark).withColumnRenamed("pixel_count", "count")
-    h.createOrReplaceTempView("histo")
-    ref_sql = (
-        "with s as (select sum(count) as total from histo) "
-        "select pct * 10 as percentile, min(value), max(value), sum(count) as count "
-        "from (select value, count, floor((sum(count) over (order by value) / total) * 10) as pct "
-        "from histo, s) group by pct order by min(value)"
-    )
-    rows = spark.sql(ref_sql).collect()
+    rows = reference_rows(spark, histo_df(spark))
     assert [r["percentile"] for r in rows] == sorted(r["percentile"] for r in rows)
     assert sum(r["count"] for r in rows) == 100
 
@@ -95,22 +110,3 @@ def test_approx_count_distinct_within_rsd(spark, sf_dir):
         assert abs(approx[k] - exact[k]) <= max(0.05 * exact[k], 2), (
             k, approx[k], exact[k],
         )
-
-
-def test_fused_form_value_identical(spark, sf_dir):
-    """deciles_fused (the bench plan: one ordered pass, no scalar-agg +
-    crossJoin) is value-identical to the reference-parity forms — on the
-    synthetic histogram (zero bins included) AND the real events
-    histogram at the test SF."""
-    from compute_histogram_spark.operators.deciles import deciles_fused
-    from compute_histogram_spark.operators.histogram import histogram
-    from compute_histogram_spark.sources.tables import load
-
-    h = histo_df(spark)
-    assert [tuple(r) for r in deciles_fused(h).collect()] == [
-        tuple(r) for r in deciles_sql(h).collect()
-    ]
-    hr = histogram(load(spark, sf_dir, "events"), "value", "linear")
-    assert [tuple(r) for r in deciles_fused(hr).collect()] == [
-        tuple(r) for r in deciles_sql(hr).collect()
-    ]

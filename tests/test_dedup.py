@@ -66,6 +66,22 @@ def test_embedding_neardup_blocking(spark):
     assert out[(0, 1)] > 0.999
 
 
+def test_minhash_aggs_quotes_the_shingle_column(spark):
+    """A shingle column whose name is not a bare identifier still builds
+    the same signatures as one named ``s``."""
+    from compute_histogram_spark.functions.texthash import minhash_aggs
+
+    sh = DD.shingle_table(docs_df(spark))
+    want = sh.groupBy("doc_id").agg(*minhash_aggs("s", 4)).orderBy("doc_id")
+    got = (
+        sh.withColumnRenamed("s", "shingle text")
+        .groupBy("doc_id")
+        .agg(*minhash_aggs("shingle text", 4))
+        .orderBy("doc_id")
+    )
+    assert got.collect() == want.collect()
+
+
 def test_incremental_minhash_index_equals_full_recompute(spark, sf_dir, tmp_path):
     """Base index + appended delta holds exactly the signatures a full
     recompute over the whole corpus produces, one row per document."""
@@ -334,23 +350,62 @@ def test_simhash_duckdb_twin(spark, sf_dir):
     assert compare("simhash", pdf, odf) == []
 
 
-def test_ngram_jaccard_arrow_equals_declarative(spark, sf_dir):
-    """The r11 fast form (checkpointed postings + vectorized pair kernel
-    + necessary-condition filter) is value-identical to the declarative
-    plan on the real corpus — the bench swaps it in like
-    doc_fingerprint_arrow, so equality is the contract."""
+def test_ngram_jaccard_matches_duckdb_oracle(spark, sf_dir):
+    """The operator (checkpointed postings + Arrow pair kernel +
+    necessary-condition filter) equals the registry's DuckDB oracle for
+    dedup_ngram_jaccard on the real corpus."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from check_oracle import compare, duck_connection
+
+    from compute_histogram_spark import registry
     from compute_histogram_spark.sources.tables import load
 
     docs = load(spark, sf_dir, "documents")
-    a = DD.ngram_jaccard_pairs(docs, threshold=0.5, max_df=100).collect()
-    b = DD.ngram_jaccard_pairs_arrow(docs, threshold=0.5, max_df=100).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert len(a) > 0
+    pdf = DD.ngram_jaccard_pairs(
+        docs, threshold=0.5, max_df=registry._NGRAM_MAX_DF
+    ).toPandas()
+    con = duck_connection(sf_dir)  # keep a ref: the relation borrows it
+    odf = con.sql(registry.ORACLES["dedup_ngram_jaccard"]).df()
+    assert len(pdf) > 0
+    assert compare("dedup_ngram_jaccard", pdf, odf) == []
+
+
+def _brute_jaccard(rows, threshold, max_df):
+    """Set Jaccard over single-space word trigrams, shingles in more than
+    ``max_df`` docs dropped, rounded half-up to 6 decimals."""
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = {}
+    for r in rows:
+        t = r.text.split(" ")
+        sets[r.doc_id] = {" ".join(t[i:i + 3]) for i in range(len(t) - 2)}
+    df = Counter(g for sh in sets.values() for g in sh)
+    if max_df is not None:
+        sets = {d: {g for g in sh if df[g] <= max_df} for d, sh in sets.items()}
+    out = []
+    ids = sorted(sets)
+    for i, d1 in enumerate(ids):
+        for d2 in ids[i + 1:]:
+            inter = len(sets[d1] & sets[d2])
+            if not inter:
+                continue
+            j = inter / len(sets[d1] | sets[d2])
+            j = float(
+                Decimal(repr(j)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
+            )
+            if j >= threshold:
+                out.append((d1, d2, j))
+    return out
 
 
 def test_ngram_jaccard_arrow_hub_cap_regimes(spark):
-    """Equality across a binding cap (boilerplate removed, group pairs
-    survive), an over-binding cap (empty output) and no cap at all."""
+    """Equality with a brute-force set Jaccard across a binding cap
+    (boilerplate removed, group pairs survive), an over-binding cap
+    (empty output) and no cap at all."""
     rows = [
         Row(
             doc_id=i,
@@ -364,12 +419,13 @@ def test_ngram_jaccard_arrow_hub_cap_regimes(spark):
     ]
     docs = spark.createDataFrame(rows)
     for max_df, expect_nonempty in ((15, True), (5, False), (None, True)):
-        a = DD.ngram_jaccard_pairs(docs, threshold=0.2, max_df=max_df).collect()
-        b = DD.ngram_jaccard_pairs_arrow(
+        got = DD.ngram_jaccard_pairs(
             docs, threshold=0.2, max_df=max_df
         ).collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b], max_df
-        assert bool(a) == expect_nonempty, max_df
+        assert [tuple(r) for r in got] == _brute_jaccard(
+            rows, 0.2, max_df
+        ), max_df
+        assert bool(got) == expect_nonempty, max_df
 
 
 def test_neardup_source_overlap_matches_pair_recount(spark, sf_dir):

@@ -623,26 +623,6 @@ def test_observe_stage_single_pass_metrics(spark, sf_dir):
     assert got["is_en"] == docs.where("lang = 'en'").count()
 
 
-def test_corpus_pipeline_arrow_twin_is_value_exact(spark, sf_dir):
-    """The r16 Arrow A/B form of corpus_pipeline's per-doc map stage:
-    value-exact vs the declarative plan (digest is only a grouping key;
-    stats use the parity-pinned _rhu6 HALF_UP twin). The A/B itself was
-    a REJECTION — sf100 solo probes read 9.23 s (Arrow) vs 5.4 s
-    (declarative): hashlib-sha256-per-row plus the full-text Arrow
-    transfer costs more than the JVM HOF stopword filter saves. Kept as
-    the pinned measured-rejection memo (BASELINE.md r16)."""
-    from compute_histogram_spark.operators.pipeline import (
-        corpus_pipeline_arrow,
-    )
-    from compute_histogram_spark.registry import q_corpus_pipeline
-    from compute_histogram_spark.sources.tables import load
-
-    a = q_corpus_pipeline(spark, sf_dir).collect()
-    b = corpus_pipeline_arrow(load(spark, sf_dir, "documents")).collect()
-    assert a == b
-    assert len(a) > 0
-
-
 def test_end_to_end_corpus_stage_boundaries_computed_once(spark, sf_dir):
     """r16 optimization round: the 5-stage chain's dedup stages each
     reference their input twice (aggregate keys, then semi/anti-join

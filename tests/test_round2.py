@@ -321,16 +321,6 @@ def test_streaming_user_stats_half_cent_rounding(spark, tmp_path):
     assert out["sum_value"] == pytest.approx((213 + 100) / 100.0)
 
 
-def test_ngram_jaccard_hub_prefilter_paths_identical(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    one_pass = DD.ngram_jaccard_pairs(docs, threshold=0.3, max_df=20).collect()
-    two_phase = DD.ngram_jaccard_pairs(
-        docs, threshold=0.3, max_df=20, hub_prefilter=True
-    ).collect()
-    assert sorted(map(tuple, one_pass)) == sorted(map(tuple, two_phase))
-    assert len(one_pass) > 0
-
-
 def test_extract_pixel_stats_real_decode(spark):
     rng = np.random.default_rng(3)
     arr = rng.integers(0, 256, size=(10, 6, 3), dtype=np.uint8)

@@ -112,20 +112,6 @@ def test_top_tokens(spark):
     assert out[0]["token"] == "the" and out[0]["n"] == 2
 
 
-def test_normalize_text(spark):
-    from pyspark.sql import Row
-
-    from compute_histogram_spark.operators.text import normalize_text
-
-    df = spark.createDataFrame(
-        [Row(doc_id=0, text="Hello,   WORLD!! 42 的 --- ok")]
-    )
-    out = normalize_text(df).first()
-    assert out["norm_text"] == "hello world 42 的 ok"
-    assert out["norm_len"] == len("hello world 42 的 ok")
-    assert out["text"].startswith("Hello")  # original untouched
-
-
 # quality_signals rotated INTO the registry window late r6; its oracle
 # now lives in registry.py (driver-checked) — small-fixture test kept.
 def test_quality_signals_small(spark):
